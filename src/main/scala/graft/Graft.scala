@@ -1,17 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.affine.{AffineGrid, LocalAffine}
-import graft.core.{Block, BlockGrid, BlockIndex, GridMeta}
+import graft.core.{Block, BlockGrid, GridMeta}
 import graft.io.BlockIO
-import graft.rel.AsofJoin
 import graft.stitch.Stitch
 
-/** Single public facade — the engine's equivalent of the reference's flat
-  * two-function API (`dask_stitch.stitch.stitch_blocks`,
+/** The reference-parity entry points — the engine's equivalent of the
+  * reference's flat two-function API (`dask_stitch.stitch.stitch_blocks`,
   * `dask_stitch.local_affine.local_affines_to_field`; the reference's
-  * `__init__.py` exports nothing, SURVEY.md §1.2). Everything here
-  * delegates to the module that owns the implementation.
+  * `__init__.py` exports nothing, SURVEY.md §1.2): stitch, restitch,
+  * refield, the streaming stitch, the affine field, the position grid,
+  * the dask array primitives and grid IO. Everything here delegates to
+  * the module that owns the implementation; every other operator is
+  * called on its own module.
   */
 object Graft {
 
@@ -165,2346 +167,4 @@ object Graft {
     */
   def writeBucketed(df: DataFrame, table: String, buckets: Int, key: String, sortKeys: String*): Unit =
     io.Bucketing.writeBucketed(df, table, buckets, key, sortKeys: _*)
-
-  // ---- extension operators -------------------------------------------
-
-  /** Salted equi-join for skew AQE can't split (hot key into hash agg /
-    * shuffled-hash join): left side salted, right replicated, exact
-    * result parity.
-    */
-  /** Interval join (`t BETWEEN start AND end`) as a binned equi-join —
-    * the scale-correct form of a range predicate Spark would otherwise
-    * plan as a broadcast nested loop ([[rel.RangeJoin]]).
-    */
-  def binnedIntervalJoin(points: DataFrame, t: String,
-      ranges: DataFrame, start: String, end: String, binWidth: Long): DataFrame =
-    rel.RangeJoin.binnedIntervalJoin(points, t, ranges, start, end, binWidth)
-
-  def saltedEquiJoin(left: DataFrame, right: DataFrame, key: String, salts: Int): DataFrame =
-    rel.SkewJoin.saltedEquiJoin(left, right, key, salts)
-
-  /** As-of join (most recent right row at-or-before each left row). */
-  def asofJoin(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      ts: String,
-      rightCols: Map[String, String]): DataFrame =
-    AsofJoin.asof(left, right, key, ts, rightCols)
-
-  // ---- similarity search / dedup (DataFrame-in, DataFrame-out) -------
-
-  /** Exact cosine top-k per query (broadcast queries + window). */
-  def cosineTopK(spark: SparkSession, emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    llm.Ann.cosineTopK(spark, emb, queries, k)
-
-  /** Approximate cosine top-k via multi-table hyperplane LSH. */
-  def lshTopK(spark: SparkSession, emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    llm.Ann.lshTopK(spark, emb, queries, k)
-
-  /** Approximate cosine top-k via IVF: distributed k-means codebook,
-    * multiple-assignment inverted lists, nearest-cell probing.
-    */
-  def ivfTopK(spark: SparkSession, emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    llm.IvfOps.ivfTopK(spark, emb, queries, k)
-
-  /** Approximate cosine top-k via product quantization: 32×-compressed
-    * codes scored by ADC table lookups, exact re-rank of the best.
-    */
-  def pqTopK(spark: SparkSession, emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    llm.PqOps.pqTopK(spark, emb, queries, k)
-
-  /** Approximate cosine top-k via IVFADC: IVF cell pruning + PQ residual
-    * codes — the compressed-and-pruned index for corpora where neither
-    * the vectors nor a full scan fit.
-    */
-  def ivfPqTopK(spark: SparkSession, emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    llm.IvfPqOps.ivfPqTopK(spark, emb, queries, k)
-
-  /** Exact duplicate groups by content hash. */
-  def exactDedupGroups(docs: DataFrame): DataFrame = llm.Dedup.exactGroups(docs)
-
-  /** Keep one row per distinct content. */
-  def dropExactDuplicates(docs: DataFrame): DataFrame = llm.Dedup.dropExactDuplicates(docs)
-
-  /** Near-dup pairs by df-capped exact n-gram Jaccard. */
-  def jaccardPairs(spark: SparkSession, docs: DataFrame, minJaccard: Double): DataFrame =
-    llm.Dedup.jaccardPairs(spark, docs, minJaccard)
-
-  /** MinHash+LSH banding candidate pairs. */
-  def minhashCandidates(spark: SparkSession, docs: DataFrame): DataFrame =
-    llm.Dedup.minhashCandidates(spark, docs)
-
-  /** Duplicate clusters from near-dup pairs (min-id label propagation). */
-  def dedupClusters(pairs: DataFrame): DataFrame =
-    llm.Dedup.connectedComponents(pairs)
-
-  /** End-to-end entity resolution over a documents corpus: SNM block →
-    * Fellegi–Sunter score → component cluster → golden record
-    * ([[rel.EntityResolution.resolveDocuments]]).
-    */
-  def resolveEntities(spark: SparkSession, docs: DataFrame, w: Int,
-      matchMilli: Long): DataFrame =
-    rel.EntityResolution.resolveDocuments(spark, docs, w, matchMilli)
-
-  /** Pairs-completeness and reduction-ratio of a blocking stage vs a
-    * ground-truth pair set ([[rel.EntityResolution.blockingQuality]]).
-    */
-  def blockingQuality(candidates: DataFrame, truePairs: DataFrame,
-      nRecords: Long): DataFrame =
-    rel.EntityResolution.blockingQuality(candidates, truePairs, nRecords)
-
-  /** Fellegi–Sunter linkage scores over candidate pairs: exact
-    * milli-bit weight sum + match/possible/nonmatch class
-    * ([[rel.Linkage.fellegiSunterScore]]).
-    */
-  def fellegiSunterScore(pairs: DataFrame,
-      fields: Seq[rel.Linkage.FieldCompare],
-      upperMilli: Long, lowerMilli: Long): DataFrame =
-    rel.Linkage.fellegiSunterScore(pairs, fields, upperMilli, lowerMilli)
-
-  /** SQ8 scalar-quantized ANN: byte codes on per-dimension ladders,
-    * asymmetric cosine, per-query top-k ([[llm.SqOps.sqTopK]]).
-    */
-  def sqTopK(spark: SparkSession, emb: DataFrame, queries: DataFrame,
-      k: Int): DataFrame =
-    llm.SqOps.sqTopK(spark, emb, queries, k)
-
-  /** Build, persist, and register a materialized view; subsequent
-    * coarser-grain SUM/COUNT aggregations over the base are answered
-    * from it transparently by the injected optimizer rule
-    * ([[plans.MvRegistry.materialize]], [[plans.MvRewriteRule]]).
-    */
-  def materializeView(spark: SparkSession, name: String, base: DataFrame,
-      basePathSuffix: String, mvPath: String, groupCols: Seq[String],
-      sums: Seq[(String, Column)], withCount: Option[String]): Unit =
-    plans.MvRegistry.materialize(spark, name, base, basePathSuffix, mvPath,
-      groupCols, sums, withCount)
-
-  /** Drop a registered materialized view from the rewrite registry. */
-  def dropMaterializedView(name: String): Unit =
-    plans.MvRegistry.unregister(name)
-
-  /** Declare a verified PK/FK constraint between two parquet tables;
-    * inner joins that read no dimension column are then eliminated by
-    * the injected optimizer rule ([[plans.FkRegistry]],
-    * [[plans.FkJoinEliminationRule]]).
-    */
-  def declareForeignKey(name: String, factPathSuffix: String, fkCol: String,
-      dimPathSuffix: String, pkCol: String): Unit =
-    plans.FkRegistry.register(plans.FkRegistry.FkConstraint(
-      name, factPathSuffix, fkCol, dimPathSuffix, pkCol))
-
-  /** Drop a declared PK/FK constraint. */
-  def dropForeignKey(name: String): Unit = plans.FkRegistry.unregister(name)
-
-  /** Fold an append-only base delta into a registered MV — delta-sized
-    * work, provably equal to a rebuild ([[plans.MvMaintenance.refresh]]).
-    */
-  def refreshMaterializedView(spark: SparkSession, name: String,
-      delta: DataFrame, sums: Seq[(String, Column)], newMvPath: String): Unit =
-    plans.MvMaintenance.refresh(spark, name, delta, sums, newMvPath)
-
-  /** Top-N key-skew report with exact shares and the salt factor to
-    * hand [[saltedEquiJoin]] directly ([[rel.SkewJoin.skewReport]]).
-    */
-  def skewReport(df: DataFrame, key: String, partitions: Int, topN: Int): DataFrame =
-    rel.SkewJoin.skewReport(df, key, partitions, topN)
-
-  /** Smallest-qualifying-width global recoding of a numeric QI
-    * ([[rel.Privacy.generalizeNumericQi]]).
-    */
-  def generalizeNumericQi(df: DataFrame, catQi: String,
-      numQi: org.apache.spark.sql.Column, widths: Seq[Long], minK: Long): DataFrame =
-    rel.Privacy.generalizeNumericQi(df, catQi, numQi, widths, minK)
-
-  /** Per-QI-group k-anonymity / l-diversity audit
-    * ([[rel.Privacy.kAnonymityAudit]]).
-    */
-  def kAnonymityAudit(df: DataFrame, qiCols: Seq[String],
-      sensitive: org.apache.spark.sql.Column, minK: Long, minL: Long): DataFrame =
-    rel.Privacy.kAnonymityAudit(df, qiCols, sensitive, minK, minL)
-
-  /** Null out quasi-identifiers on rows in sub-`minK` groups
-    * ([[rel.Privacy.suppressSmallGroups]]).
-    */
-  def suppressSmallGroups(df: DataFrame, qiCols: Seq[String], minK: Long): DataFrame =
-    rel.Privacy.suppressSmallGroups(df, qiCols, minK)
-
-  /** Sorted-neighborhood candidate pairs: rows within `w` positions in
-    * `sortCols` order — linear pair volume even under heavy boilerplate
-    * skew ([[llm.SortedNeighborhood.neighborhoodPairs]]).
-    */
-  def sortedNeighborhoodPairs(df: DataFrame,
-      sortCols: Seq[org.apache.spark.sql.Column], id: String, w: Int): DataFrame =
-    llm.SortedNeighborhood.neighborhoodPairs(df, sortCols, id, w)
-
-  /** Compact an appended near-dup index ([[llm.DedupIndex.compact]]). */
-  def compactDedupIndex(spark: SparkSession, dir: String): Unit =
-    llm.DedupIndex.compact(spark, dir)
-
-  /** Compact an appended IVF index ([[llm.AnnIndex.compactIvf]]). */
-  def compactIvfIndex(spark: SparkSession, dir: String): Unit =
-    llm.AnnIndex.compactIvf(spark, dir)
-
-  /** Streaming dedup-on-ingest: per batch, drop intra-batch and
-    * vs-corpus near-dups, emit survivors, append them to the index
-    * ([[llm.DedupIndex.ingestStream]]).
-    */
-  def dedupIngestStream(spark: SparkSession, stream: DataFrame, dir: String,
-      outDir: String, checkpoint: String, minJaccard: Double)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    llm.DedupIndex.ingestStream(spark, stream, dir, outDir, checkpoint, minJaccard)
-
-  /** SemDeDup-shaped semantic dedup: cluster embeddings, flag docs with
-    * a smaller-id cluster-mate above the cosine threshold
-    * ([[llm.LlmOps.semDedup]]).
-    */
-  def semDedup(spark: SparkSession, emb: DataFrame, cells: Int = 16,
-      threshold: Double = 0.4): DataFrame =
-    llm.LlmOps.semDedup(spark, emb, cells = cells, threshold = threshold)
-
-  /** Substring-level exact dedup: per-doc merged spans of k-token grams
-    * occurring ≥ minCount times corpus-wide (Lee et al.'s ExactSubstr;
-    * [[llm.Dedup.repeatedSpans]]).
-    */
-  def repeatedSpans(spark: SparkSession, docs: DataFrame, k: Int,
-      minCount: Long = 2): DataFrame =
-    llm.Dedup.repeatedSpans(spark, docs, k, minCount)
-
-  /** Exactly-once streaming parquet sink (file-sink commit log +
-    * checkpointed offsets; restart resumes with no loss or duplicates).
-    */
-  def parquetSink(df: DataFrame, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streaming.EventStream.parquetSink(df, path, checkpoint)
-
-  /** Codegen'd sequential-f64 dot product over array<float> columns. */
-  def vecDot(spark: SparkSession, a: Column, b: Column): Column =
-    functions.VecFunctions.vecDot(spark, a, b)
-
-  /** Cosine similarity with the oracle-parity expression shape. */
-  def vecCosine(spark: SparkSession, a: Column, b: Column): Column =
-    functions.VecFunctions.vecCosine(spark, a, b)
-
-  /** OPQ (learned-rotation PQ) approximate cosine top-k ([[llm.OpqOps.opqTopK]]). */
-  def opqTopK(spark: SparkSession, emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    llm.Ann.opqTopK(spark, emb, queries, k)
-
-  /** Bloom runtime semi-join: pre-filter the probe side before the join
-    * shuffle ([[rel.BloomJoin.bloomEquiJoin]]); results are exact.
-    */
-  def bloomEquiJoin(spark: SparkSession, probe: DataFrame, build: DataFrame,
-      key: String, expectedNdv: Long, fpp: Double = 0.01): DataFrame =
-    rel.BloomJoin.bloomEquiJoin(spark, probe, build, key, expectedNdv, fpp)
-
-  /** Z-order clustered parquet write for two-column range pruning
-    * ([[io.Layout.zorderWrite]]).
-    */
-  def zorderWrite(spark: SparkSession, df: DataFrame, c1: String, c2: String,
-      path: String, files: Int): Unit =
-    io.Layout.zorderWrite(spark, df, c1, c2, path, files)
-
-  /** Codegen'd Morton interleave of two non-negative bigint columns. */
-  def zValue(spark: SparkSession, a: Column, b: Column): Column =
-    functions.ZValue.zValue(spark, a, b)
-
-  /** Train a BPE subword vocabulary on the corpus ([[llm.Bpe.train]]). */
-  def bpeTrain(spark: SparkSession, docs: DataFrame, numMerges: Int): Seq[llm.Bpe.Merge] =
-    llm.Bpe.train(spark, docs, numMerges)
-
-  /** Per-doc token counts under trained BPE merges ([[llm.Bpe.tokenCounts]]). */
-  def bpeTokenCounts(spark: SparkSession, docs: DataFrame,
-      merges: Seq[llm.Bpe.Merge]): DataFrame =
-    llm.Bpe.tokenCounts(spark, docs, merges)
-
-  /** Per-query retrieval metrics — precision/recall@k, MRR, NDCG@k —
-    * of a ranking against graded qrels ([[llm.Eval.rankingMetrics]]).
-    */
-  def rankingMetrics(spark: SparkSession, ranked: DataFrame,
-      qrels: DataFrame, k: Int): DataFrame =
-    llm.Eval.rankingMetrics(spark, ranked, qrels, k)
-
-  /** Per-class precision/recall/F1 report from predictions vs labels
-    * ([[llm.Eval.classificationReport]]).
-    */
-  def classificationReport(spark: SparkSession, pred: DataFrame,
-      truth: DataFrame): DataFrame =
-    llm.Eval.classificationReport(spark, pred, truth)
-
-  /** Per-group exact tie-aware AUC of an integer score against a
-    * boolean label, with the exact integer numerator
-    * ([[llm.Eval.groupedAuc]]).
-    */
-  def groupedAuc(df: DataFrame, group: org.apache.spark.sql.Column,
-      score: org.apache.spark.sql.Column,
-      label: org.apache.spark.sql.Column): DataFrame =
-    llm.Eval.groupedAuc(df, group, score, label)
-
-  /** Laplace-smoothed weight-of-evidence encoding table per category
-    * ([[rel.Encode.woeEncode]]).
-    */
-  def woeEncode(df: DataFrame, category: String,
-      label: org.apache.spark.sql.Column): DataFrame =
-    rel.Encode.woeEncode(df, category, label)
-
-  /** Apply a CDC change batch (I/U/D + sequence, last-writer-wins) to a
-    * keyed snapshot ([[rel.Cdc.applyBatch]] — the MERGE INTO primitive).
-    */
-  /** Diff two keyed snapshots into the minimal I/U/D change batch;
-    * applyBatch(a, cdcDiff(a, b)) reconstructs b exactly
-    * ([[rel.Cdc.diff]]).
-    */
-  def cdcDiff(oldSnap: DataFrame, newSnap: DataFrame, keys: Seq[String],
-      seq: Long = 1L): DataFrame =
-    rel.Cdc.diff(oldSnap, newSnap, keys, seq)
-
-  /** SCD2 version history straight from a sequenced CDC change log
-    * ([[rel.Cdc.scd2History]]).
-    */
-  def cdcHistory(changes: DataFrame, keys: Seq[String]): DataFrame =
-    rel.Cdc.scd2History(changes, keys)
-
-  def cdcApply(base: DataFrame, changes: DataFrame, keys: Seq[String],
-      seqCol: String = "seq", opCol: String = "op",
-      tieBreak: Option[String] = None): DataFrame =
-    rel.Cdc.applyBatch(base, changes, keys, seqCol, opCol, tieBreak)
-
-  /** Schema-evolving CDC apply: add-column change batches land against
-    * old-schema snapshots and vice versa, null-filling per the
-    * lakehouse mergeSchema contract ([[rel.Cdc.applyBatchEvolving]]).
-    */
-  def cdcApplyEvolving(base: DataFrame, changes: DataFrame,
-      keys: Seq[String], seqCol: String = "seq", opCol: String = "op",
-      tieBreak: Option[String] = None): DataFrame =
-    rel.Cdc.applyBatchEvolving(base, changes, keys, seqCol, opCol, tieBreak)
-
-  /** Schema-evolving versioned (replay-safe) CDC state apply
-    * ([[rel.Cdc.applyVersionedEvolving]]).
-    */
-  def cdcApplyVersionedEvolving(state: DataFrame, changes: DataFrame,
-      keys: Seq[String], seqCol: String = "seq",
-      opCol: String = "op"): DataFrame =
-    rel.Cdc.applyVersionedEvolving(state, changes, keys, seqCol, opCol)
-
-  /** Train per-language character-trigram profiles with exact integer
-    * micro-frequency weights ([[llm.LangId.trainProfiles]]).
-    */
-  def langidTrain(train: DataFrame): DataFrame =
-    llm.LangId.trainProfiles(train)
-
-  /** Classify (id, text) rows against trained trigram profiles —
-    * deterministic integer argmax ([[llm.LangId.predict]]).
-    */
-  def langidPredict(docs: DataFrame, profiles: DataFrame,
-      id: String = "doc_id"): DataFrame =
-    llm.LangId.predict(docs, profiles, id)
-
-  /** Binary (1-bit) quantization ANN: sign codes on exact-median
-    * thresholds, popcount Hamming shortlist, exact cosine re-rank
-    * ([[llm.BinaryAnn.binaryTopK]]).
-    */
-  def binaryAnnTopK(spark: SparkSession, emb: DataFrame, queries: DataFrame,
-      k: Int, rerank: Int): DataFrame =
-    llm.BinaryAnn.binaryTopK(spark, emb, queries, k, rerank)
-
-  /** Token-window document chunking with overlap — the RAG/packing
-    * splitter; one narrow pass, per-doc-bounded fan-out
-    * ([[llm.Chunk.chunkDocuments]]).
-    */
-  def chunkDocuments(docs: DataFrame, window: Int, stride: Int): DataFrame =
-    llm.Chunk.chunkDocuments(docs, window, stride)
-
-  /** Hard-negative mining for contrastive training: per query, the k
-    * most-similar OTHER-label vectors ([[llm.Mining.hardNegatives]]).
-    */
-  def hardNegatives(spark: SparkSession, emb: DataFrame, queries: DataFrame,
-      k: Int): DataFrame =
-    llm.Mining.hardNegatives(spark, emb, queries, k)
-
-  /** Exact mutual-kNN graph over an embedding table: undirected u < v
-    * edges present in both top-k lists ([[llm.Mining.mutualKnn]]).
-    */
-  def mutualKnn(spark: SparkSession, emb: DataFrame, k: Int): DataFrame =
-    llm.Mining.mutualKnn(spark, emb, k)
-
-  /** IVF-bucketed approximate kNN edges — the 100 TB all-pairs shape
-    * (per-cell blocks, no corpus n²; [[llm.Mining.knnEdgesIvf]]).
-    */
-  def knnEdgesIvf(spark: SparkSession, emb: DataFrame, k: Int,
-      cells: Int = 16, multiAssign: Int = 2): DataFrame =
-    llm.Mining.knnEdgesIvf(spark, emb, k, cells = cells,
-      multiAssign = multiAssign)
-
-  /** Semantic clusters: connected components of the mutual-kNN graph,
-    * singletons included ([[llm.Mining.semanticClusters]]).
-    */
-  def semanticClusters(spark: SparkSession, emb: DataFrame, k: Int): DataFrame =
-    llm.Mining.semanticClusters(spark, emb, k)
-
-  /** Semantic clusters over the IVF-bucketed mutual graph — the 100 TB
-    * clustering path: no all-pairs scoring, no whole-corpus query
-    * broadcast ([[llm.Mining.semanticClustersIvf]]).
-    */
-  def semanticClustersIvf(spark: SparkSession, emb: DataFrame, k: Int,
-      cells: Int = 16, multiAssign: Int = 2): DataFrame =
-    llm.Mining.semanticClustersIvf(spark, emb, k, cells = cells,
-      multiAssign = multiAssign)
-
-  /** Components of a caller-supplied undirected (u, v) similarity edge
-    * set over `emb`'s id domain, singletons included
-    * ([[llm.Mining.semanticClustersFromEdges]]).
-    */
-  def semanticClustersFromEdges(spark: SparkSession, emb: DataFrame,
-      edges: DataFrame): DataFrame =
-    llm.Mining.semanticClustersFromEdges(spark, emb, edges)
-
-  /** Threshold-attach edges under corpus growth: pairs at cosine ≥
-    * tauMilli/1000 touching the batch — the monotone (merge-only)
-    * incremental edge producer ([[llm.Mining.attachEdges]]).
-    */
-  def attachEdges(spark: SparkSession, corpus: DataFrame, batch: DataFrame,
-      tauMilli: Int): DataFrame =
-    llm.Mining.attachEdges(spark, corpus, batch, tauMilli)
-
-  /** Incremental semantic-cluster maintenance: fold an arrival batch
-    * into existing labels via threshold attach + the quotient-sized
-    * components fold — no corpus re-clustering
-    * ([[llm.Mining.clustersDelta]]).
-    */
-  def clustersDelta(spark: SparkSession, labels: DataFrame,
-      corpus: DataFrame, batch: DataFrame, tauMilli: Int): DataFrame =
-    llm.Mining.clustersDelta(spark, labels, corpus, batch, tauMilli)
-
-  /** The large-batch maintenance shape: IVF-celled attach under the
-    * cells ∝ n sizing rule ([[llm.Mining.clustersDeltaIvf]]).
-    */
-  def clustersDeltaIvf(spark: SparkSession, labels: DataFrame,
-      corpus: DataFrame, batch: DataFrame, tauMilli: Int,
-      cells: Int = 16, multiAssign: Int = 2): DataFrame =
-    llm.Mining.clustersDeltaIvf(spark, labels, corpus, batch, tauMilli,
-      cells = cells, multiAssign = multiAssign)
-
-  /** Pair-level agreement of two clusterings (Rand / adjusted Rand in
-    * exact truncated milli) via the contingency of label co-occurrence
-    * sizes — no pair materialization; the rebuild-drift monitor
-    * ([[llm.Eval.clusteringAgreement]]).
-    */
-  def clusteringAgreement(spark: SparkSession, a: DataFrame,
-      b: DataFrame): DataFrame =
-    llm.Eval.clusteringAgreement(spark, a, b)
-
-  /** MMR-diversified retrieval: bounded top-`poolSize` relevance pool,
-    * then integer-milli greedy diversification to k results
-    * ([[llm.Mmr.mmrTopK]]).
-    */
-  def mmrTopK(spark: SparkSession, emb: DataFrame, queries: DataFrame,
-      k: Int, poolSize: Int, lambdaMilli: Int = 700): DataFrame =
-    llm.Mmr.mmrTopK(spark, emb, queries, k, poolSize, lambdaMilli)
-
-  /** MMR pooled from a persisted binary ANN index probe — the serving
-    * form; bit-identical to [[mmrTopK]] at equal pool membership
-    * ([[llm.Mmr.mmrProbeBinary]]).
-    */
-  def mmrProbeBinary(spark: SparkSession, dir: String, queries: DataFrame,
-      k: Int, poolSize: Int, rerank: Int, lambdaMilli: Int = 700): DataFrame =
-    llm.Mmr.mmrProbeBinary(spark, dir, queries, k, poolSize, rerank, lambdaMilli)
-
-  /** MMR pooled from a persisted IVF index probe
-    * ([[llm.Mmr.mmrProbeIvf]]).
-    */
-  def mmrProbeIvf(spark: SparkSession, dir: String, queries: DataFrame,
-      k: Int, poolSize: Int, nProbe: Int = 6, lambdaMilli: Int = 700): DataFrame =
-    llm.Mmr.mmrProbeIvf(spark, dir, queries, k, poolSize, nProbe, lambdaMilli)
-
-  /** Compact a binary ANN index's append logs (bit-identical replayed
-    * rows only; probe output unchanged — [[llm.BinaryAnn.compactBinary]]).
-    */
-  def compactBinaryIndex(spark: SparkSession, dir: String): Unit =
-    llm.BinaryAnn.compactBinary(spark, dir)
-
-  /** End-to-end hybrid retrieval: token-window chunking → chunk-BM25
-    * collapsed to best-window document scores → RRF fusion with the
-    * dense ranking ([[llm.Pipeline.hybridChunkRetrieve]]).
-    */
-  def hybridChunkRetrieve(spark: SparkSession, docs: DataFrame,
-      queries: Seq[(Int, Seq[String])], emb: DataFrame, qvecs: DataFrame,
-      window: Int = 40, stride: Int = 30,
-      kPerSystem: Int = 10, kFused: Int = 10): DataFrame =
-    llm.Pipeline.hybridChunkRetrieve(spark, docs, queries, emb, qvecs,
-      window, stride, kPerSystem, kFused)
-
-  /** The full retrieval chain with its measurement tail: hybrid
-    * retrieve → MMR diversification → ranking metrics
-    * ([[llm.Pipeline.retrieveDiversifyEval]]).
-    */
-  def retrieveDiversifyEval(spark: SparkSession, docs: DataFrame,
-      queries: Seq[(Int, Seq[String])], emb: DataFrame, qvecs: DataFrame,
-      qrels: DataFrame, k: Int, lambdaMilli: Int = 700): DataFrame =
-    llm.Pipeline.retrieveDiversifyEval(spark, docs, queries, emb, qvecs,
-      qrels, k, lambdaMilli)
-
-  /** Persist the chunk-level lexical index the served retrieval
-    * pipeline reads ([[llm.Pipeline.saveChunkLexical]]).
-    */
-  def saveChunkLexical(spark: SparkSession, docs: DataFrame, dir: String,
-      window: Int = 40, stride: Int = 30, buckets: Int = 64): Unit =
-    llm.Pipeline.saveChunkLexical(spark, docs, dir, window, stride, buckets)
-
-  /** Streaming maintenance of the chunk index — new docs chunk with
-    * the same cid packing and append
-    * ([[llm.Pipeline.appendChunkLexicalStream]]).
-    */
-  def appendChunkLexicalStream(spark: SparkSession, stream: DataFrame,
-      dir: String, checkpoint: String, window: Int = 40, stride: Int = 30,
-      buckets: Int = 64): org.apache.spark.sql.streaming.StreamingQuery =
-    llm.Pipeline.appendChunkLexicalStream(spark, stream, dir, checkpoint,
-      window, stride, buckets)
-
-  /** Deployable logistic model row (a, b, cbar)
-    * ([[rel.Logistic.logisticModel]]) and map-side scoring against it
-    * ([[rel.Logistic.scoreLogistic]]).
-    */
-  def logisticModel(df: DataFrame, label: String = "y",
-      covariate: String = "x", iters: Int = 8): DataFrame =
-    rel.Logistic.logisticModel(df, label, covariate, iters)
-
-  def scoreLogistic(units: DataFrame, model: DataFrame,
-      covariate: String = "x"): DataFrame =
-    rel.Logistic.scoreLogistic(units, model, covariate)
-
-  /** Brier decomposition + Hosmer-Lemeshow calibration audit
-    * ([[rel.Logistic.calibrationAudit]]).
-    */
-  def calibrationAudit(df: DataFrame, label: String = "y",
-      score: String = "p_micro"): DataFrame =
-    rel.Logistic.calibrationAudit(df, label, score)
-
-  /** The SERVED hybrid retrieval pipeline: lexical pooled from a
-    * persisted chunk index, dense from a persisted IVF index — the
-    * corpus is never touched at query time
-    * ([[llm.Pipeline.hybridProbeRetrieve]]).
-    */
-  def hybridProbeRetrieve(spark: SparkSession, lexDir: String, annDir: String,
-      queries: Seq[(Int, Seq[String])], qvecs: DataFrame,
-      kPerSystem: Int = 10, kFused: Int = 10, nProbe: Int = 6,
-      buckets: Int = 64): DataFrame =
-    llm.Pipeline.hybridProbeRetrieve(spark, lexDir, annDir, queries, qvecs,
-      kPerSystem, kFused, nProbe, buckets)
-
-  /** The served hybrid pipeline with the dense rung from a persisted
-    * BINARY index ([[llm.Pipeline.hybridProbeRetrieveBinary]]).
-    */
-  def hybridProbeRetrieveBinary(spark: SparkSession, lexDir: String,
-      binDir: String, queries: Seq[(Int, Seq[String])], qvecs: DataFrame,
-      kPerSystem: Int = 10, kFused: Int = 10, rerank: Int = 50,
-      buckets: Int = 64): DataFrame =
-    llm.Pipeline.hybridProbeRetrieveBinary(spark, lexDir, binDir, queries,
-      qvecs, kPerSystem, kFused, rerank, buckets)
-
-  /** The served full retrieval chain with MMR diversification and
-    * ranking metrics, diversity vectors from the index's own id→vec
-    * store ([[llm.Pipeline.retrieveDiversifyEvalProbe]]).
-    */
-  def retrieveDiversifyEvalProbe(spark: SparkSession, lexDir: String,
-      annDir: String, queries: Seq[(Int, Seq[String])], qvecs: DataFrame,
-      qrels: DataFrame, k: Int, lambdaMilli: Int = 700,
-      nProbe: Int = 6): DataFrame =
-    llm.Pipeline.retrieveDiversifyEvalProbe(spark, lexDir, annDir, queries,
-      qvecs, qrels, k, lambdaMilli, nProbe = nProbe)
-
-  /** Per-label centroid outliers in exact integer arithmetic — the
-    * embedding-quality audit ([[llm.Outliers.centroidOutliers]]).
-    */
-  def centroidOutliers(spark: SparkSession, emb: DataFrame, k: Int): DataFrame =
-    llm.Outliers.centroidOutliers(spark, emb, k)
-
-  /** Persist a binary (1-bit) ANN index: thresholds + packed codes +
-    * vectors ([[llm.BinaryAnn.saveBinary]]).
-    */
-  def saveBinaryIndex(spark: SparkSession, emb: DataFrame, dir: String): Unit =
-    llm.BinaryAnn.saveBinary(spark, emb, dir)
-
-  /** Probe a saved binary ANN index — bit-identical to
-    * [[binaryAnnTopK]] on the same corpus ([[llm.BinaryAnn.probeBinary]]).
-    */
-  def probeBinaryIndex(spark: SparkSession, dir: String, queries: DataFrame,
-      k: Int, rerank: Int): DataFrame =
-    llm.BinaryAnn.probeBinary(spark, dir, queries, k, rerank)
-
-  /** Global prefix sum without a partition-less window
-    * ([[rel.GlobalRank.prefixSumByOrder]]).
-    */
-  def prefixSumByOrder(df: DataFrame, sortCols: Seq[org.apache.spark.sql.Column],
-      value: org.apache.spark.sql.Column): DataFrame =
-    rel.GlobalRank.prefixSumByOrder(df, sortCols, value)
-
-  /** Cohen's κ chance-corrected agreement ([[llm.Eval.cohenKappa]]). */
-  def cohenKappa(spark: SparkSession, pred: DataFrame,
-      truth: DataFrame): DataFrame =
-    llm.Eval.cohenKappa(spark, pred, truth)
-
-  /** Temporal train/valid/test split with an embargo quarantine band
-    * before each cutoff ([[llm.Curation.temporalSplit]]).
-    */
-  def temporalSplit(docs: DataFrame, ts: String,
-      validFrom: java.sql.Timestamp, testFrom: java.sql.Timestamp,
-      embargo: java.time.Duration): DataFrame =
-    llm.Curation.temporalSplit(docs, ts, validFrom, testFrom, embargo)
-
-  /** Train a WordPiece subword vocabulary (likelihood-argmax merges,
-    * [[llm.WordPiece.train]]); returns (merges, serving vocab).
-    */
-  def wordpieceTrain(spark: SparkSession, docs: DataFrame,
-      numMerges: Int): (Seq[llm.WordPiece.Merge], llm.WordPiece.Vocab) =
-    llm.WordPiece.train(spark, docs, numMerges)
-
-  /** Per-doc greedy longest-match token counts under a trained
-    * WordPiece vocabulary ([[llm.WordPiece.tokenCounts]]).
-    */
-  def wordpieceTokenCounts(spark: SparkSession, docs: DataFrame,
-      vocab: llm.WordPiece.Vocab): DataFrame =
-    llm.WordPiece.tokenCounts(spark, docs, vocab)
-
-  /** Train a unigram-LM (SentencePiece-style) subword vocabulary on the
-    * corpus ([[llm.Unigram.train]] — deterministic hard-EM).
-    */
-  def unigramTrain(spark: SparkSession, docs: DataFrame,
-      targetVocab: Int): llm.Unigram.Vocab =
-    llm.Unigram.train(spark, docs, targetVocab)
-
-  /** Per-doc Viterbi token counts under a trained unigram vocabulary
-    * ([[llm.Unigram.tokenCounts]]).
-    */
-  def unigramTokenCounts(spark: SparkSession, docs: DataFrame,
-      vocab: llm.Unigram.Vocab): DataFrame =
-    llm.Unigram.tokenCounts(spark, docs, vocab)
-
-  /** Build a persisted near-dup index ([[llm.DedupIndex.save]]). */
-  def saveDedupIndex(spark: SparkSession, docs: DataFrame, dir: String): Unit =
-    llm.DedupIndex.save(spark, docs, dir)
-
-  /** Probe new docs against a saved near-dup index ([[llm.DedupIndex.probe]]). */
-  def probeDedupIndex(spark: SparkSession, dir: String, newDocs: DataFrame,
-      minJaccard: Double): DataFrame =
-    llm.DedupIndex.probe(spark, dir, newDocs, minJaccard)
-
-  /** Training docs sharing long n-grams with an eval set
-    * ([[llm.Curation.contamination]]).
-    */
-  def contamination(spark: SparkSession, train: DataFrame, eval: DataFrame,
-      k: Int = 8): DataFrame =
-    llm.Curation.contamination(spark, train, eval, k)
-
-  /** Count + redact emails/phones ([[llm.Curation.piiScrub]]). */
-  def piiScrub(spark: SparkSession, docs: DataFrame): DataFrame =
-    llm.Curation.piiScrub(spark, docs)
-
-  /** Luhn-verified payment-card detection + redaction
-    * ([[llm.Curation.piiCards]]).
-    */
-  def piiCards(spark: SparkSession, docs: DataFrame): DataFrame =
-    llm.Curation.piiCards(spark, docs)
-
-  /** Flesch–Kincaid grade + Reading Ease readability features
-    * ([[llm.TextStats.readability]]).
-    */
-  def readability(spark: SparkSession, docs: DataFrame): DataFrame =
-    llm.TextStats.readability(spark, docs)
-
-  /** Zipf slope/intercept of the corpus token distribution
-    * ([[llm.TextStats.zipfFit]]).
-    */
-  def zipfFit(spark: SparkSession, docs: DataFrame,
-      topK: Int = 100): DataFrame =
-    llm.TextStats.zipfFit(spark, docs, topK)
-
-  /** Token burstiness (cf/df) of the corpus's top terms
-    * ([[llm.TextStats.tokenBurstiness]]).
-    */
-  def tokenBurstiness(spark: SparkSession, docs: DataFrame,
-      topK: Int = 20): DataFrame =
-    llm.TextStats.tokenBurstiness(spark, docs, topK)
-
-  /** Per-doc character-entropy quality signal
-    * ([[llm.TextStats.charEntropy]]).
-    */
-  def charEntropy(spark: SparkSession, docs: DataFrame): DataFrame =
-    llm.TextStats.charEntropy(spark, docs)
-
-  /** Deterministic per-source mixture sampling ([[llm.Curation.mixtureSample]]). */
-  def mixtureSample(spark: SparkSession, docs: DataFrame,
-      rates: Map[String, Double]): DataFrame =
-    llm.Curation.mixtureSample(spark, docs, rates)
-
-  /** Stratified mixture sampling by per-source token budgets
-    * ([[llm.Curation.mixtureSampleByBudget]]).
-    */
-  def mixtureSampleByBudget(spark: SparkSession, docs: DataFrame,
-      budgets: Map[String, Long]): DataFrame =
-    llm.Curation.mixtureSampleByBudget(spark, docs, budgets)
-
-  /** Epoch-aware mixture upsampling ([[llm.Curation.mixtureUpsample]]). */
-  def mixtureUpsample(spark: SparkSession, docs: DataFrame,
-      weights: Map[String, Double]): DataFrame =
-    llm.Curation.mixtureUpsample(spark, docs, weights)
-
-  /** HTML → text extraction ([[llm.Curation.extractHtmlText]]). */
-  def extractHtmlText(spark: SparkSession, pages: DataFrame): DataFrame =
-    llm.Curation.extractHtmlText(spark, pages)
-
-  /** Span-level decontamination (mask, don't drop)
-    * ([[llm.Curation.decontaminateSpans]]).
-    */
-  def decontaminateSpans(spark: SparkSession, train: DataFrame,
-      eval: DataFrame, k: Int = 8): DataFrame =
-    llm.Curation.decontaminateSpans(spark, train, eval, k)
-
-  /** Deterministic seeded global shuffle for training order
-    * ([[llm.Curation.shuffleCorpus]]).
-    */
-  def shuffleCorpus(spark: SparkSession, docs: DataFrame, seed: Long): DataFrame =
-    llm.Curation.shuffleCorpus(spark, docs, seed)
-
-  /** Hashing-trick linear model scoring
-    * ([[llm.Curation.scoreQualityModel]]).
-    */
-  def scoreQualityModel(spark: SparkSession, docs: DataFrame,
-      weightsMilli: Array[Long]): DataFrame =
-    llm.Curation.scoreQualityModel(spark, docs, weightsMilli)
-
-  /** Gopher-style repetition quality signals ([[llm.Curation.repetitionSignals]]). */
-  def repetitionSignals(spark: SparkSession, docs: DataFrame): DataFrame =
-    llm.Curation.repetitionSignals(spark, docs)
-
-  /** Greedy first-fit sequence packing ([[llm.Pack.packSequences]]). */
-  def packSequences(spark: SparkSession, docs: DataFrame, maxTokens: Long): DataFrame =
-    llm.Pack.packSequences(spark, docs, maxTokens)
-
-  /** Length-bucketed dynamic batching ([[llm.Pack.lengthBucketBatches]]). */
-  def lengthBucketBatches(spark: SparkSession, docs: DataFrame,
-      batchSize: Int, seed: Long): DataFrame =
-    llm.Pack.lengthBucketBatches(spark, docs, batchSize, seed)
-
-  /** Overlapping-window doc chunking ([[llm.Pack.chunkDocs]]). */
-  def chunkDocs(spark: SparkSession, docs: DataFrame, window: Int, stride: Int): DataFrame =
-    llm.Pack.chunkDocs(spark, docs, window, stride)
-
-  /** Materialize packed training sequences — BPE token ids per doc,
-    * packed and concatenated per sequence, written under `dir` with the
-    * id↔token vocab ([[llm.Pack.materializeSequences]]).
-    */
-  def materializeSequences(spark: SparkSession, docs: DataFrame,
-      merges: Seq[llm.Bpe.Merge], dir: String, maxSeqTokens: Long): DataFrame =
-    llm.Pack.materializeSequences(spark, docs, merges, dir, maxSeqTokens)
-
-  /** C4-style line-level exact dedup — first occurrence wins corpus-wide
-    * ([[llm.Dedup.dedupLines]]).
-    */
-  def dedupLines(spark: SparkSession, docs: DataFrame): DataFrame =
-    llm.Dedup.dedupLines(spark, docs)
-
-  /** URL/domain curation stage: parse, blocklist, per-domain cap
-    * ([[llm.Curation.urlDomainFilter]]).
-    */
-  def urlDomainFilter(spark: SparkSession, docs: DataFrame,
-      blocklist: Seq[String], maxPerDomain: Int): DataFrame =
-    llm.Curation.urlDomainFilter(spark, docs, blocklist, maxPerDomain)
-
-  /** Snapshot diff: added/removed/changed/unchanged by id + content hash
-    * ([[llm.Curation.snapshotDiff]]).
-    */
-  def snapshotDiff(spark: SparkSession, oldSnap: DataFrame, newSnap: DataFrame): DataFrame =
-    llm.Curation.snapshotDiff(spark, oldSnap, newSnap)
-
-  /** Sharded training-artifact writer with a verifiable manifest
-    * ([[llm.Pack.writeShards]]).
-    */
-  def writeShards(spark: SparkSession, seqs: DataFrame, dir: String,
-      seqsPerShard: Long): DataFrame =
-    llm.Pack.writeShards(spark, seqs, dir, seqsPerShard)
-
-  /** One-pass per-column dataset profile; `exact = false` swaps
-    * count-distinct for HLL sketches ([[rel.Profile.profile]]).
-    */
-  def profile(spark: SparkSession, df: DataFrame, cols: Seq[String],
-      exact: Boolean = true): DataFrame =
-    rel.Profile.profile(spark, df, cols, exact)
-
-  /** Equi-width histogram with out-of-range accounting
-    * ([[rel.Profile.histogram]]).
-    */
-  def histogram(spark: SparkSession, df: DataFrame, column: String,
-      nBins: Int, lo: Double, hi: Double): DataFrame =
-    rel.Profile.histogram(spark, df, column, nBins, lo, hi)
-
-  /** BM25 lexical top-k for a query batch ([[llm.Lexical.bm25TopK]]). */
-  def bm25TopK(spark: SparkSession, docs: DataFrame,
-      queries: Seq[(Int, Seq[String])], k: Int): DataFrame =
-    llm.Lexical.bm25TopK(spark, docs, queries, k)
-
-  /** Persist a bucket-partitioned lexical index
-    * ([[llm.Lexical.saveLexical]]).
-    */
-  def saveLexicalIndex(spark: SparkSession, docs: DataFrame, dir: String): Unit =
-    llm.Lexical.saveLexical(spark, docs, dir)
-
-  /** BM25 against a saved lexical index — bucket-pruned, bit-identical
-    * to [[bm25TopK]] ([[llm.Lexical.probeBm25]]).
-    */
-  def probeLexicalIndex(spark: SparkSession, dir: String,
-      queries: Seq[(Int, Seq[String])], k: Int): DataFrame =
-    llm.Lexical.probeBm25(spark, dir, queries, k)
-
-  /** Stream new docs' postings into a saved lexical index
-    * ([[llm.Lexical.appendLexicalStream]]).
-    */
-  def appendLexicalStream(spark: SparkSession, stream: DataFrame, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    llm.Lexical.appendLexicalStream(spark, stream, dir, checkpoint)
-
-  /** Compact an appended lexical index and refresh its corpus stats
-    * ([[llm.Lexical.compactLexical]]).
-    */
-  def compactLexicalIndex(spark: SparkSession, dir: String): Unit =
-    llm.Lexical.compactLexical(spark, dir)
-
-  /** Reciprocal-rank fusion of per-query ranked lists — hybrid
-    * lexical+dense retrieval without score calibration
-    * ([[llm.Fusion.rrfFuse]]).
-    */
-  def rrfFuse(rankings: Seq[DataFrame], k: Int, c: Int = 60): DataFrame =
-    llm.Fusion.rrfFuse(rankings, k, c)
-
-  /** Deterministic A-ES weighted sampling without replacement, k per
-    * stratum ([[llm.Curation.weightedSample]]).
-    */
-  def weightedSample(spark: SparkSession, docs: DataFrame, k: Int,
-      weight: Column, stratum: Option[String] = None): DataFrame =
-    llm.Curation.weightedSample(spark, docs, k, weight, stratum)
-
-  /** Add-one-smoothed bigram-LM quality scores for `docs` under a model
-    * trained on `modelCorpus` ([[llm.Curation.bigramLmScore]]).
-    */
-  def bigramLmScore(spark: SparkSession, modelCorpus: DataFrame,
-      docs: DataFrame): DataFrame =
-    llm.Curation.bigramLmScore(spark, modelCorpus, docs)
-
-  /** Per-source KL divergence from the corpus token mixture
-    * ([[llm.Curation.sourceDivergence]]).
-    */
-  def sourceDivergence(spark: SparkSession, docs: DataFrame): DataFrame =
-    llm.Curation.sourceDivergence(spark, docs)
-
-  /** Fit PCA on the deterministic bounded sample
-    * ([[llm.Pca.fitPca]]).
-    */
-  def fitPca(spark: SparkSession, emb: DataFrame, p: Int): llm.Pca.PcaModel =
-    llm.Pca.fitPca(spark, emb, p)
-
-  /** Zero-shuffle projection onto a fitted PCA model
-    * ([[llm.Pca.projectPca]]).
-    */
-  def projectPca(spark: SparkSession, emb: DataFrame,
-      m: llm.Pca.PcaModel): DataFrame =
-    llm.Pca.projectPca(spark, emb, m)
-
-  /** PCA-screened kNN: reduced-space candidates, exact full-space
-    * re-rank ([[llm.Pca.pcaTopK]]).
-    */
-  def pcaTopK(spark: SparkSession, emb: DataFrame, queries: DataFrame,
-      k: Int, p: Int, candMult: Int = 4): DataFrame =
-    llm.Pca.pcaTopK(spark, emb, queries, k, p, candMult)
-
-  /** Leakage-free train/val/test split: assignment is a pure function
-    * of the near-dup cluster id, so near-dup pairs cannot straddle
-    * splits ([[llm.Curation.splitByCluster]]).
-    */
-  def splitByCluster(spark: SparkSession, docs: DataFrame, clusters: DataFrame,
-      fractions: Seq[(String, Double)]): DataFrame =
-    llm.Curation.splitByCluster(spark, docs, clusters, fractions)
-
-  /** Versioned (upsert-able) lexical index: postings append under
-    * (doc, ver); the probe serves each doc's LATEST version with
-    * update-exact idf ([[llm.Lexical.saveLexicalVersioned]]).
-    */
-  def saveLexicalVersioned(spark: SparkSession, docs: DataFrame, dir: String): Unit =
-    llm.Lexical.saveLexicalVersioned(spark, docs, dir)
-
-  /** Streaming upserts into a versioned lexical index
-    * ([[llm.Lexical.upsertLexicalStream]]).
-    */
-  def upsertLexicalStream(spark: SparkSession, stream: DataFrame, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    llm.Lexical.upsertLexicalStream(spark, stream, dir, checkpoint)
-
-  /** BM25 top-k over the LATEST version of every doc in a versioned
-    * lexical index ([[llm.Lexical.probeBm25Latest]]).
-    */
-  def probeBm25Latest(spark: SparkSession, dir: String,
-      queries: Seq[(Int, Seq[String])], k: Int): DataFrame =
-    llm.Lexical.probeBm25Latest(spark, dir, queries, k)
-
-  /** All row pairs of `df` whose `str` values are within Levenshtein
-    * distance ≤ maxDist — deletion-neighborhood blocking, exact verify
-    * ([[rel.FuzzyJoin.selfPairs]]).
-    */
-  def fuzzySelfPairs(spark: SparkSession, df: DataFrame, id: String,
-      str: String, maxDist: Int = 1): DataFrame =
-    rel.FuzzyJoin.selfPairs(spark, df, id, str, maxDist)
-
-  /** Cross-table fuzzy join within Levenshtein ≤ maxDist
-    * ([[rel.FuzzyJoin.joinPairs]]).
-    */
-  def fuzzyJoin(spark: SparkSession, left: DataFrame, lid: String, lstr: String,
-      right: DataFrame, rid: String, rstr: String, maxDist: Int = 1): DataFrame =
-    rel.FuzzyJoin.joinPairs(spark, left, lid, lstr, right, rid, rstr, maxDist)
-
-  /** Fixed-point integer PageRank — bit-exact on any engine
-    * ([[graph.PageRank.pagerankFixedPoint]]).
-    */
-  def pagerank(spark: SparkSession, edges: DataFrame, iters: Int = 5): DataFrame =
-    graph.PageRank.pagerankFixedPoint(spark, edges, iters)
-
-  /** Per-node triangle counts with degree-oriented wedge bounding
-    * ([[graph.Triangles.triangleCounts]]).
-    */
-  def triangleCounts(spark: SparkSession, edges: DataFrame): DataFrame =
-    graph.Triangles.triangleCounts(spark, edges)
-
-  /** Per-edge triangle counts = common-neighbor count of each existing
-    * edge (edge embeddedness numerator) on the same √(2m)-bounded
-    * oriented machinery ([[graph.Triangles.edgeTriangleCounts]]).
-    */
-  def edgeTriangleCounts(spark: SparkSession, edges: DataFrame): DataFrame =
-    graph.Triangles.edgeTriangleCounts(spark, edges)
-
-  /** SCD Type-2 state-history build: consecutive equal attribute runs
-    * as [valid_from, valid_to) intervals ([[rel.Scd.scd2]]).
-    */
-  def scd2(spark: SparkSession, df: DataFrame, key: String, attr: String,
-      ts: String, tie: String): DataFrame =
-    rel.Scd.scd2(spark, df, key, attr, ts, tie)
-
-  /** Batch sessionization at an integer-microsecond gap
-    * ([[rel.Scd.sessionize]]).
-    */
-  def sessionize(spark: SparkSession, df: DataFrame, key: String, ts: String,
-      tie: String, gapMicros: Long): DataFrame =
-    rel.Scd.sessionize(spark, df, key, ts, tie, gapMicros)
-
-  /** Perceptual audio near-dup pairs: WAV decode → gain-invariant
-    * energy-delta fingerprint → banded LSH → exact Hamming
-    * ([[llm.ImageOps.audioFingerprintDups]]).
-    */
-  def audioNearDups(spark: SparkSession, blobs: DataFrame,
-      maxHamming: Int = 6): DataFrame =
-    llm.ImageOps.audioFingerprintDups(spark, blobs, maxHamming)
-
-  /** Perceptual image near-dup pairs over BMP blobs: decode → 8×8
-    * aHash → banded LSH → exact Hamming
-    * ([[llm.ImageOps.imagePerceptualDups]]).
-    */
-  def imageNearDups(spark: SparkSession, blobs: DataFrame,
-      maxHamming: Int = 8): DataFrame =
-    llm.ImageOps.imagePerceptualDups(spark, blobs, maxHamming)
-
-  /** The same image near-dup over PNG blobs (real zlib decode, all
-    * five filters), corrupt blobs quarantined
-    * ([[llm.ImageOps.imagePerceptualDupsPng]]).
-    */
-  def imageNearDupsPng(spark: SparkSession, blobs: DataFrame,
-      maxHamming: Int = 8): DataFrame =
-    llm.ImageOps.imagePerceptualDupsPng(spark, blobs, maxHamming)
-
-  /** The same image near-dup over GIF blobs (real LZW decode),
-    * corrupt blobs quarantined ([[llm.ImageOps.imagePerceptualDupsGif]]).
-    */
-  def imageNearDupsGif(spark: SparkSession, blobs: DataFrame,
-      maxHamming: Int = 8): DataFrame =
-    llm.ImageOps.imagePerceptualDupsGif(spark, blobs, maxHamming)
-
-  /** Exact shortest-path distances from a seed set, capped at maxHops
-    * ([[graph.Bfs.boundedDistances]]).
-    */
-  def bfsDistances(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
-      maxHops: Int): DataFrame =
-    graph.Bfs.boundedDistances(spark, edges, seeds, maxHops)
-
-  /** Connected components of an undirected edge list in O(log n)
-    * rounds via large-star/small-star — use over [[dedupClusters]]
-    * when component diameters can be large
-    * ([[graph.ConnectedComponents.connectedComponents]]).
-    */
-  def connectedComponents(spark: SparkSession, edges: DataFrame): DataFrame =
-    graph.ConnectedComponents.connectedComponents(spark, edges)
-
-  /** Per-node local clustering coefficients (exact triangle/degree
-    * pairs, rounded division)
-    * ([[graph.Triangles.clusteringCoefficients]]).
-    */
-  def clusteringCoefficients(spark: SparkSession, edges: DataFrame): DataFrame =
-    graph.Triangles.clusteringCoefficients(spark, edges)
-
-  /** Fold a delta edge batch into existing component labels via the
-    * label-quotient graph — corpus touched by two joins, iteration
-    * bounded by the batch
-    * ([[graph.ConnectedComponents.incrementalComponents]]).
-    */
-  def incrementalComponents(spark: SparkSession, labels: DataFrame,
-      newEdges: DataFrame): DataFrame =
-    graph.ConnectedComponents.incrementalComponents(spark, labels, newEdges)
-
-  /** Nodes of the k-core (max subgraph with all degrees ≥ k) with their
-    * in-core degrees; throws if the peel has not stabilized within
-    * maxRounds ([[graph.KCore.kCore]]).
-    */
-  def kCore(spark: SparkSession, edges: DataFrame, k: Int,
-      maxRounds: Int = 20): DataFrame =
-    graph.KCore.kCore(spark, edges, k, maxRounds)
-
-  /** Fixed-point integer EWMA (alpha = num/den) per key in `ord` order,
-    * appended as column `smooth` — one shuffle, sequential per-key fold
-    * ([[rel.Series.ewmaFixedPoint]]).
-    */
-  def ewmaFixedPoint(df: DataFrame, key: String, ord: String, value: String,
-      num: Long, den: Long): DataFrame =
-    rel.Series.ewmaFixedPoint(df, key, ord, value, num, den)
-
-  /** Streaming twin of [[ewmaFixedPoint]] at alpha = 1/4: (key,
-    * epochDay, cents) rows → cumulative per-key (n_days, last_day,
-    * smooth) emissions each batch ([[streaming.StreamingOps.ewmaStream]]).
-    */
-  def ewmaStream(rows: org.apache.spark.sql.Dataset[(Long, Int, Long)])
-      : org.apache.spark.sql.Dataset[(Long, Long, Int, Long)] =
-    streaming.StreamingOps.ewmaStream(rows)
-
-  /** Leakage-safe out-of-fold target-encoding table over (category,
-    * fold, integral value) ([[rel.Encode.targetEncode]]).
-    */
-  def targetEncode(df: DataFrame, category: String, fold: String,
-      value: String): DataFrame =
-    rel.Encode.targetEncode(df, category, fold, value)
-
-  /** Strictly-ordered funnel conversion: per step, users whose first
-    * qualifying event follows their previous stage's first-touch time.
-    * Returns (step, users) rows ([[rel.Funnel.funnelCounts]]).
-    */
-  def funnel(events: DataFrame, typeCol: String, userCol: String,
-      tsMicrosCol: String, steps: Seq[String]): DataFrame =
-    rel.Funnel.funnelCounts(events, typeCol, userCol, tsMicrosCol, steps)
-
-  /** Retention cohorts keyed by first-active day: (cohort_day,
-    * day_offset, active_users) ([[rel.Funnel.retentionCohorts]]).
-    */
-  def retention(events: DataFrame, userCol: String, dayCol: String): DataFrame =
-    rel.Funnel.retentionCohorts(events, userCol, dayCol)
-
-  /** Windowed PMI collocations over a text column: (a, b, c2, pmi_r6)
-    * for unordered token pairs within `window` positions seen at least
-    * `minCount` times ([[llm.Cooccur.pmiPairs]]).
-    */
-  def pmiPairs(spark: SparkSession, docs: DataFrame, window: Int = 2,
-      minCount: Long = 5, text: String = "text"): DataFrame =
-    llm.Cooccur.pmiPairs(spark, docs, window, minCount, text)
-
-  /** Asymmetric containment near-dup pairs (|A∩B| / min(|A|,|B|) in
-    * exact milli-units) — the excerpt/superset modality Jaccard misses
-    * ([[llm.Dedup.containmentPairs]]).
-    */
-  def containmentPairs(spark: SparkSession, docs: DataFrame,
-      minContMilli: Long, id: String = "id", text: String = "text"): DataFrame =
-    llm.Dedup.containmentPairs(spark, docs, minContMilli, id = id, text = text)
-
-  /** Personalized PageRank: fixed-point integer ranks with restart
-    * mass returning to `seeds` (col `node`)
-    * ([[graph.PageRank.personalizedPagerank]]).
-    */
-  def personalizedPagerank(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame, iters: Int = 5): DataFrame =
-    graph.PageRank.personalizedPagerank(spark, edges, seeds, iters)
-
-  /** One-pass declarative data-quality audit: (rule, violations) per
-    * boolean violation predicate, single scan regardless of rule count
-    * ([[rel.Quality.audit]]; see also [[rel.Quality.duplicateKeys]] and
-    * [[rel.Quality.orphans]]).
-    */
-  def qualityAudit(df: DataFrame,
-      rules: Seq[(String, org.apache.spark.sql.Column)]): DataFrame =
-    rel.Quality.audit(df, rules)
-
-  /** Algebraic aggregate state of the pricing summary over a lineitem
-    * slice, and its key-wise merge — the incremental-materialized-view
-    * pair ([[rel.Incremental.pricingState]] /
-    * [[rel.Incremental.mergeStates]]): state ⊕ delta is bit-identical
-    * to a full recompute.
-    */
-  def aggState(li: DataFrame): DataFrame = rel.Incremental.pricingState(li)
-
-  /** Merge two algebraic aggregate states key-wise
-    * ([[rel.Incremental.mergeStates]]).
-    */
-  def mergeAggStates(a: DataFrame, b: DataFrame): DataFrame =
-    rel.Incremental.mergeStates(a, b)
-
-  /** Weighted fixed-point PageRank: rank flows in proportion to integer
-    * edge weights ([[graph.PageRank.weightedPagerank]]).
-    */
-  def weightedPagerank(spark: SparkSession, edges: DataFrame,
-      iters: Int = 5): DataFrame =
-    graph.PageRank.weightedPagerank(spark, edges, iters)
-
-  /** Degree assortativity coefficient of an undirected graph — exact
-    * integer moments, one two-sqrt floating tail
-    * ([[graph.Assortativity.degreeAssortativity]]).
-    */
-  def degreeAssortativity(spark: SparkSession, edges: DataFrame): DataFrame =
-    graph.Assortativity.degreeAssortativity(spark, edges)
-
-  /** Exact mode of `value` per `group` with a pinned total tie order
-    * ([[rel.Categorical.groupMode]]).
-    */
-  def groupMode(df: DataFrame, group: String, value: String): DataFrame =
-    rel.Categorical.groupMode(df, group, value)
-
-  /** Exact weighted median of `value` per `group` via the cumulative-
-    * weight threshold ([[rel.Summary.weightedMedian]]).
-    */
-  def weightedMedian(df: DataFrame, group: String, value: String,
-      weight: String): DataFrame =
-    rel.Summary.weightedMedian(df, group, value, weight)
-
-  /** Offline CUSUM changepoint statistic over an ordered series, as the
-    * exact n-scaled integer partial sum ([[rel.Cohort.cusumScan]]).
-    */
-  def cusumScan(df: DataFrame, ord: String, value: String): DataFrame =
-    rel.Cohort.cusumScan(df, ord, value)
-
-  /** Exact-adjacency phrase-occurrence counts per document — a codegen'd
-    * array lambda, no posting list ([[llm.Phrase.phraseCounts]]).
-    */
-  def phraseCounts(docs: DataFrame, idCol: String, textCol: String,
-      phrase: Seq[String]): DataFrame =
-    llm.Phrase.phraseCounts(docs, idCol, textCol, phrase)
-
-  /** Prefix-filtered Jaccard near-dup join at threshold tMilli/1000 —
-    * df-ordered prefixes bound the candidate space, exact verify keeps
-    * the output bit-identical to [[nearDupPairs]]-style full machinery
-    * at the same threshold ([[llm.Dedup.prefixJaccardPairs]]).
-    */
-  def prefixJaccardPairs(spark: SparkSession, docs: DataFrame,
-      minJacMilli: Int): DataFrame =
-    llm.Dedup.prefixJaccardPairs(spark, docs, minJacMilli)
-
-  /** Earliest time-respecting arrival over a timestamped edge list —
-    * the temporal-graph reachability min-fold
-    * ([[graph.Temporal.earliestArrival]]).
-    */
-  def earliestArrival(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame, rounds: Int): DataFrame =
-    graph.Temporal.earliestArrival(spark, edges, seeds, rounds)
-
-  /** Bounded-hop maximum-bottleneck (widest) path capacities — the
-    * max-min dual of [[bfsDistances]] ([[graph.Bfs.widestPaths]]).
-    */
-  def widestPaths(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
-      maxHops: Int): DataFrame =
-    graph.Bfs.widestPaths(spark, edges, seeds, maxHops)
-
-  /** Compact a many-small-files parquet table under a records-per-file
-    * bound, optionally sorted for tight min/max stats; returns
-    * (files_before, files_after, rows) ([[io.Layout.compact]]).
-    */
-  def compactTable(spark: SparkSession, inPath: String, outPath: String,
-      maxRecordsPerFile: Long, sortCols: Seq[String] = Nil): (Long, Long, Long) =
-    io.Layout.compact(spark, inPath, outPath, maxRecordsPerFile, sortCols)
-
-  /** DSIR importance weights — length-normalized log-likelihood ratio of
-    * each raw-pool doc under add-one n-gram multinomials trained on
-    * `target` vs `raw` (Xie et al. NeurIPS 2023;
-    * [[llm.Dsir.dsirWeights]]).
-    */
-  def dsirWeights(spark: SparkSession, target: DataFrame, raw: DataFrame): DataFrame =
-    llm.Dsir.dsirWeights(spark, target, raw)
-
-  /** DSIR Gumbel-top-k importance resampling with deterministic
-    * hash-seeded noise; τ = tauMilli/1000, τ=0 is top-k by weight
-    * ([[llm.Dsir.dsirGumbelTopK]]).
-    */
-  def dsirSample(spark: SparkSession, target: DataFrame, raw: DataFrame,
-      k: Int, tauMilli: Int): DataFrame =
-    llm.Dsir.dsirGumbelTopK(spark, target, raw, k, tauMilli)
-
-  /** DSIR weights under the m-bucket hashed feature model — the
-    * broadcastable fixed-size form for corpus-scale pools
-    * ([[llm.Dsir.dsirWeightsHashed]]).
-    */
-  def dsirWeightsHashed(spark: SparkSession, target: DataFrame, raw: DataFrame,
-      buckets: Int): DataFrame =
-    llm.Dsir.dsirWeightsHashed(spark, target, raw, buckets)
-
-  /** Train DSIR's frozen model triple (target counts, raw counts,
-    * totals) — persist once, score every ingested batch
-    * ([[llm.Dsir.trainModels]]).
-    */
-  def dsirTrainModels(spark: SparkSession, target: DataFrame,
-      raw: DataFrame): (DataFrame, DataFrame, DataFrame) =
-    llm.Dsir.trainModels(spark, target, raw)
-
-  /** Score docs against frozen DSIR models — the batch/streaming-shared
-    * ingest-time kernel ([[llm.Dsir.dsirScoreWithModels]]).
-    */
-  def dsirScore(spark: SparkSession, docs: DataFrame, tm: DataFrame,
-      rm: DataFrame, totals: DataFrame): DataFrame =
-    llm.Dsir.dsirScoreWithModels(spark, docs, tm, rm, totals)
-
-  /** RM3 pseudo-relevance-feedback expansion terms: top-m of
-    * α·P(t|R) + (1−α)·P_orig over BM25 feedback docs
-    * ([[llm.Rm3.rm3Expansion]]).
-    */
-  def rm3Expansion(spark: SparkSession, docs: DataFrame,
-      queries: Seq[(Int, Seq[String])], nFb: Int, mExp: Int,
-      alphaMilli: Int): DataFrame =
-    llm.Rm3.rm3Expansion(spark, docs, queries, nFb, mExp, alphaMilli)
-
-  /** Full RM3 loop: expand, then weighted-BM25 second-pass top-k
-    * ([[llm.Rm3.rm3Rerank]]).
-    */
-  def rm3Rerank(spark: SparkSession, docs: DataFrame,
-      queries: Seq[(Int, Seq[String])], nFb: Int, mExp: Int,
-      alphaMilli: Int, k: Int): DataFrame =
-    llm.Rm3.rm3Rerank(spark, docs, queries, nFb, mExp, alphaMilli, k)
-
-  /** Dirichlet-smoothed query-likelihood retrieval, bounded-heap top-k
-    * ([[llm.Ql.qlDirichletTopK]]).
-    */
-  def qlDirichletTopK(spark: SparkSession, docs: DataFrame,
-      queries: Seq[(Int, Seq[String])], k: Int, mu: Double = 500.0): DataFrame =
-    llm.Ql.qlDirichletTopK(spark, docs, queries, k, mu)
-
-  /** Jelinek–Mercer-smoothed query-likelihood retrieval, bounded-heap
-    * top-k ([[llm.Ql.qlJmTopK]]).
-    */
-  def qlJmTopK(spark: SparkSession, docs: DataFrame,
-      queries: Seq[(Int, Seq[String])], k: Int, lambdaMilli: Int = 400): DataFrame =
-    llm.Ql.qlJmTopK(spark, docs, queries, k, lambdaMilli)
-
-  /** CUPED variance-reduced per-variant experiment summary
-    * ([[rel.Experiment.cuped]]).
-    */
-  def cuped(units: DataFrame, variant: String = "variant",
-      x: String = "x", y: String = "y"): DataFrame =
-    rel.Experiment.cuped(units, variant, x, y)
-
-  /** Deterministic Poisson-bootstrap percentile CI for per-group means
-    * ([[rel.Experiment.bootstrapCi]]).
-    */
-  def bootstrapCi(df: DataFrame, group: String, id: String,
-      valueMilli: String, reps: Int = 40): DataFrame =
-    rel.Experiment.bootstrapCi(df, group, id, valueMilli, reps)
-
-  /** Exact lower median of a non-negative long column, two-pass
-    * histogram selection ([[rel.Robust.exactMedianNonNeg]]).
-    */
-  def exactMedianNonNeg(df: DataFrame, c: String): (Long, Long) =
-    rel.Robust.exactMedianNonNeg(df, c)
-
-  /** Median/MAD modified z-score outlier summary
-    * ([[rel.Robust.madOutlierSummary]]).
-    */
-  def madOutlierSummary(spark: SparkSession, df: DataFrame, c: String): DataFrame =
-    rel.Robust.madOutlierSummary(spark, df, c)
-
-  /** Calibration reliability table over integer-milli probabilities
-    * ([[llm.Eval.calibrationBins]]).
-    */
-  def calibrationBins(scored: DataFrame, pMilli: String = "p_milli",
-      label: String = "y", bins: Int = 10): DataFrame =
-    llm.Eval.calibrationBins(scored, pMilli, label, bins)
-
-  /** Scalar ECE + Brier calibration summary
-    * ([[llm.Eval.calibrationSummary]]).
-    */
-  def calibrationSummary(scored: DataFrame, pMilli: String = "p_milli",
-      label: String = "y", bins: Int = 10): DataFrame =
-    llm.Eval.calibrationSummary(scored, pMilli, label, bins)
-
-  /** Krippendorff's alpha (nominal, missing ratings allowed), exact
-    * truncated milli ([[llm.Eval.krippendorffAlpha]]).
-    */
-  def krippendorffAlpha(spark: SparkSession, ratings: DataFrame,
-      unit: String = "unit", rater: String = "rater",
-      value: String = "value"): DataFrame =
-    llm.Eval.krippendorffAlpha(spark, ratings, unit, rater, value)
-
-  /** Sample-ratio-mismatch chi-square guardrail
-    * ([[rel.Experiment.srmCheck]]).
-    */
-  def srmCheck(assignments: DataFrame, variant: String,
-      expectedMilli: Map[String, Long]): DataFrame =
-    rel.Experiment.srmCheck(assignments, variant, expectedMilli)
-
-  /** Delta-method CI for a per-variant ratio metric
-    * ([[rel.Experiment.deltaRatioCi]]).
-    */
-  def deltaRatioCi(units: DataFrame, variant: String = "variant",
-      x: String = "x", y: String = "y"): DataFrame =
-    rel.Experiment.deltaRatioCi(units, variant, x, y)
-
-  /** Additive CUPED sufficient statistics / fold / readout — the
-    * incremental maintenance triple ([[rel.Experiment.cupedMoments]],
-    * [[rel.Experiment.cupedFold]], [[rel.Experiment.cupedFromMoments]]).
-    */
-  def cupedMoments(units: DataFrame, variant: String = "variant",
-      x: String = "x", y: String = "y"): DataFrame =
-    rel.Experiment.cupedMoments(units, variant, x, y)
-
-  def cupedFold(a: DataFrame, b: DataFrame): DataFrame =
-    rel.Experiment.cupedFold(a, b)
-
-  def cupedFromMoments(mom: DataFrame): DataFrame =
-    rel.Experiment.cupedFromMoments(mom)
-
-  /** t-closeness audit: per-QI-group ordered EMD vs the global
-    * sensitive distribution ([[rel.Privacy.tClosenessAudit]]).
-    */
-  def tClosenessAudit(df: DataFrame, qiCols: Seq[String], sensitive: Column,
-      tMilli: Long): DataFrame =
-    rel.Privacy.tClosenessAudit(df, qiCols, sensitive, tMilli)
-
-  /** Kaplan-Meier product-limit survival curve under right-censoring
-    * ([[rel.Survival.kaplanMeier]]).
-    */
-  def kaplanMeier(df: DataFrame, duration: String = "t",
-      event: String = "e"): DataFrame =
-    rel.Survival.kaplanMeier(df, duration, event)
-
-  /** One-pass exact Gram table over integer columns
-    * ([[rel.Gram.gramMatrix]]) and the driver-side ridge solve
-    * ([[rel.Gram.ridgeSolveFromGram]]).
-    */
-  def gramMatrix(df: DataFrame, cols: Seq[String]): DataFrame =
-    rel.Gram.gramMatrix(df, cols)
-
-  def ridgeSolveFromGram(gram: DataFrame, lambdaMilli: Long,
-      interceptIdx: Int = -1): Array[Double] =
-    rel.Gram.ridgeSolveFromGram(gram, lambdaMilli, interceptIdx)
-
-  /** Chi-square term selection per label ([[llm.Features.chiSquareTerms]]). */
-  def chiSquareTerms(spark: SparkSession, docs: DataFrame, k: Int,
-      minDf: Long): DataFrame =
-    llm.Features.chiSquareTerms(spark, docs, k, minDf)
-
-  /** Two-group log-rank survival test ([[rel.Survival.logRank]]). */
-  def logRank(df: DataFrame, duration: String = "t", event: String = "e",
-      group: String = "g"): DataFrame =
-    rel.Survival.logRank(df, duration, event, group)
-
-  /** Grouped exact k-th smallest, two-pass histogram selection
-    * ([[rel.Robust.groupedExactKth]]).
-    */
-  def groupedExactKth(df: DataFrame, group: String, c: String,
-      kOf: Long => Long): DataFrame =
-    rel.Robust.groupedExactKth(df, group, c, kOf)
-
-  /** Split-conformal per-group thresholds
-    * ([[rel.Robust.conformalThresholds]]).
-    */
-  def conformalThresholds(df: DataFrame, group: String, scoreMilli: String,
-      alphaMilli: Long): DataFrame =
-    rel.Robust.conformalThresholds(df, group, scoreMilli, alphaMilli)
-
-  /** Grouped exact quantiles, one histogram pass for all (group, q)
-    * ([[rel.Robust.groupedExactQuantiles]]).
-    */
-  def groupedExactQuantiles(df: DataFrame, group: String, c: String,
-      qMillis: Seq[Long]): DataFrame =
-    rel.Robust.groupedExactQuantiles(df, group, c, qMillis)
-
-  /** Mann-Kendall trend test per group ([[rel.Distribution.mannKendall]]). */
-  def mannKendall(daily: DataFrame): DataFrame =
-    rel.Distribution.mannKendall(daily)
-
-  /** Pearson correlation matrix from an intercept-bearing gram table
-    * ([[rel.Gram.corrFromGram]]).
-    */
-  def corrFromGram(gram: DataFrame): DataFrame =
-    rel.Gram.corrFromGram(gram)
-
-  /** Spearman rank correlation matrix over integer columns
-    * ([[rel.Gram.spearmanPairs]]).
-    */
-  def spearmanPairs(df: DataFrame, id: String, cols: Seq[String]): DataFrame =
-    rel.Gram.spearmanPairs(df, id, cols)
-
-  /** Kruskal–Wallis H test across k groups, tie-corrected
-    * ([[rel.Inference.kruskalWallis]]).
-    */
-  def kruskalWallis(df: DataFrame, group: String, value: String): DataFrame =
-    rel.Inference.kruskalWallis(df, group, value)
-
-  /** Deterministic randomization-test p-values per test key
-    * ([[rel.Inference.permutationPValues]]).
-    */
-  def permutationPValues(df: DataFrame, test: Column, id: Column,
-      valueCents: Column, sideB: Column, reps: Int = 199): DataFrame =
-    rel.Inference.permutationPValues(df, test, id, valueCents, sideB, reps)
-
-  /** Benjamini–Hochberg step-up over exact-rational p-values
-    * ([[rel.Inference.bhStepUp]]).
-    */
-  def bhStepUp(tests: DataFrame, testCol: String, pNum: String,
-      pDen: String, alphaMilli: Long = 50L): DataFrame =
-    rel.Inference.bhStepUp(tests, testCol, pNum, pDen, alphaMilli)
-
-  /** Two-sample minimum-detectable-effect readout at α=0.05/power=0.80
-    * ([[rel.Inference.mdeTwoSample]]).
-    */
-  def mdeTwoSample(units: DataFrame, variant: String = "variant",
-      valueMilli: String = "y"): DataFrame =
-    rel.Inference.mdeTwoSample(units, variant, valueMilli)
-
-  /** Winsorized + trimmed means per group at exact quantile bounds
-    * ([[rel.Robust.winsorizedSummary]]).
-    */
-  def winsorizedSummary(df: DataFrame, group: String, c: String,
-      loMilli: Long = 50L, hiMilli: Long = 950L): DataFrame =
-    rel.Robust.winsorizedSummary(df, group, c, loMilli, hiMilli)
-
-  /** Link prediction: common-neighbor + resource-allocation scores for
-    * non-adjacent distance-2 pairs ([[graph.LinkPrediction
-    * .linkPredictionScores]]).
-    */
-  def linkPredictionScores(spark: SparkSession, edges: DataFrame,
-      degCap: Long = 4096L, topN: Int = 50): DataFrame =
-    graph.LinkPrediction.linkPredictionScores(spark, edges, degCap, topN)
-
-  /** HITS hubs/authorities on directed (u, v) edges, fixed-point
-    * integers with max-norm renormalization per half-step
-    * ([[graph.Hits.hitsFixedPoint]]).
-    */
-  def hitsFixedPoint(spark: SparkSession, edges: DataFrame,
-      iters: Int = 4): DataFrame =
-    graph.Hits.hitsFixedPoint(spark, edges, iters)
-
-  /** Nelson–Aalen cumulative hazard + Fleming–Harrington survival
-    * transform under right-censoring ([[rel.Survival.nelsonAalen]]).
-    */
-  def nelsonAalen(df: DataFrame, duration: String = "t",
-      event: String = "e"): DataFrame =
-    rel.Survival.nelsonAalen(df, duration, event)
-
-  /** Exact Shapley-value channel attribution over per-user exposure
-    * coalitions, k ≤ 8 channels ([[rel.Shapley.shapleyAttribution]]).
-    */
-  def shapleyAttribution(events: DataFrame, channels: Seq[String],
-      convType: String, userCol: String = "user_id",
-      typeCol: String = "event_type"): DataFrame =
-    rel.Shapley.shapleyAttribution(events, channels, convType, userCol, typeCol)
-
-  /** Exact per-lag autocorrelation of one integer series keyed by a
-    * long time index ([[rel.Series.acfExact]]).
-    */
-  def acfExact(df: DataFrame, ord: String, value: String,
-      maxLag: Int): DataFrame =
-    rel.Series.acfExact(df, ord, value, maxLag)
-
-  /** Ljung–Box white-noise portmanteau test at lag depth h over a
-    * regular complete series ([[rel.Series.ljungBox]]).
-    */
-  def ljungBox(df: DataFrame, ord: String, value: String, h: Int): DataFrame =
-    rel.Series.ljungBox(df, ord, value, h)
-
-  /** Markov-chain removal-effect attribution over per-user journeys,
-    * fixed-horizon integer absorption
-    * ([[rel.Attribution.markovRemovalEffects]]).
-    */
-  def markovRemovalEffects(events: DataFrame, channels: Seq[String],
-      convType: String, iters: Int = 8): DataFrame =
-    rel.Attribution.markovRemovalEffects(events, channels, convType,
-      iters = iters)
-
-  /** Eval-set decontamination audit: train docs sharing any word
-    * n-gram with a broadcast eval set
-    * ([[llm.Decontam.contaminationAudit]]).
-    */
-  def contaminationAudit(spark: SparkSession, train: DataFrame,
-      eval: DataFrame, n: Int, id: String = "id",
-      text: String = "text"): DataFrame =
-    llm.Decontam.contaminationAudit(spark, train, eval, n, id, text)
-
-  /** Bradley–Terry strengths from (winner, loser) preference rows,
-    * fixed-point integer MM rounds ([[rel.Preference.bradleyTerry]]).
-    */
-  def bradleyTerry(comparisons: DataFrame, winner: String = "w",
-      loser: String = "l", iters: Int = 10): DataFrame =
-    rel.Preference.bradleyTerry(comparisons, winner, loser, iters)
-
-  /** Exact neighborhood function N(t) + effective-diameter curve over
-    * undirected (u, v) edges
-    * ([[graph.Anf.neighborhoodFunctionExact]]).
-    */
-  def neighborhoodFunctionExact(spark: SparkSession, edges: DataFrame,
-      maxT: Int): DataFrame =
-    graph.Anf.neighborhoodFunctionExact(spark, edges, maxT)
-
-  /** HyperANF: the HLL-register neighborhood function — linear state,
-    * integer-micro estimates, row-replayable registers
-    * ([[graph.Anf.neighborhoodFunctionHll]]).
-    */
-  def neighborhoodFunctionHll(spark: SparkSession, edges: DataFrame,
-      maxT: Int): DataFrame =
-    graph.Anf.neighborhoodFunctionHll(spark, edges, maxT)
-
-  /** Isotonic (monotone) calibration fit over pre-binned unit rows by
-    * the closed-form minimax identity ([[rel.Isotonic.isotonicFit]]).
-    */
-  def isotonicFit(df: DataFrame, bin: String = "bin",
-      y: String = "y"): DataFrame =
-    rel.Isotonic.isotonicFit(df, bin, y)
-
-  /** Theil–Sen robust trend: lower-median pairwise slope +
-    * Hettmansperger intercept ([[rel.Series.theilSen]]).
-    */
-  def theilSen(df: DataFrame, ord: String, value: String): DataFrame =
-    rel.Series.theilSen(df, ord, value)
-
-  /** Stratified ATE (discrete-propensity IPW) with loud positivity
-    * handling ([[rel.Causal.stratifiedAte]]).
-    */
-  def stratifiedAte(df: DataFrame, treat: String = "treat",
-      y: String = "y", stratum: String = "s"): DataFrame =
-    rel.Causal.stratifiedAte(df, treat, y, stratum)
-
-  /** Frequent ordered subsequences of per-key event sequences, up to
-    * length 3 ([[rel.SeqMine.frequentSequences]]).
-    */
-  def frequentSequences(df: DataFrame, key: String, ord: String,
-      tie: String, item: String, minSupport: Long): DataFrame =
-    rel.SeqMine.frequentSequences(df, key, ord, tie, item, minSupport)
-
-  /** Per-feature best Gini stump split — the leakage/importance audit
-    * ([[rel.Tree.splitGains]]).
-    */
-  def splitGains(df: DataFrame, features: Seq[String],
-      label: String = "y"): DataFrame =
-    rel.Tree.splitGains(df, features, label)
-
-  /** Sharp regression discontinuity, local linear per side
-    * ([[rel.Causal.regressionDiscontinuity]]).
-    */
-  def regressionDiscontinuity(df: DataFrame, running: String = "x",
-      outcome: String = "y", cutoff: Double = 0.0,
-      bandwidthMilli: Long = 1000000L): DataFrame =
-    rel.Causal.regressionDiscontinuity(df, running, outcome, cutoff,
-      bandwidthMilli)
-
-  /** Least-squares single changepoint of an ordered series
-    * ([[rel.Series.changepointSse]]).
-    */
-  def changepointSse(df: DataFrame, ord: String = "o",
-      value: String = "y"): DataFrame =
-    rel.Series.changepointSse(df, ord, value)
-
-  /** Difference-in-differences over (treat, period, y) unit rows
-    * ([[rel.Causal.diffInDiff]]).
-    */
-  def diffInDiff(df: DataFrame, treat: String = "treat",
-      period: String = "period", y: String = "y"): DataFrame =
-    rel.Causal.diffInDiff(df, treat, period, y)
-
-  /** Raking / iterative proportional fitting to target marginals
-    * ([[rel.Raking.rake]]).
-    */
-  def rake(units: DataFrame, rowVar: String, colVar: String,
-      rowTargets: DataFrame, colTargets: DataFrame,
-      iters: Int = 6): DataFrame =
-    rel.Raking.rake(units, rowVar, colVar, rowTargets, colTargets, iters)
-
-  /** Logistic regression (intercept + one covariate), replayable
-    * fixed-round Newton ([[rel.Logistic.logisticFit]]).
-    */
-  def logisticFit(df: DataFrame, label: String = "y",
-      covariate: String = "x", iters: Int = 8): DataFrame =
-    rel.Logistic.logisticFit(df, label, covariate, iters)
-
-  /** IPW ATE on a logistic propensity with clipped weights
-    * ([[rel.Logistic.ipwAte]]).
-    */
-  def ipwAte(df: DataFrame, treat: String = "treat", outcome: String = "yo",
-      covariate: String = "x", iters: Int = 8,
-      clipMilli: Int = 10): DataFrame =
-    rel.Logistic.ipwAte(df, treat, outcome, covariate, iters, clipMilli)
-
-  /** Benford first-digit audit with the χ²(8) conformance readout
-    * ([[rel.Quality.benfordAudit]]); the mergeable counts stage and
-    * batch readout are exposed separately for streaming ingest
-    * ([[rel.Quality.benfordCounts]] / [[rel.Quality.benfordFromCounts]]).
-    */
-  def benfordAudit(df: DataFrame, c: String): DataFrame =
-    rel.Quality.benfordAudit(df, c)
-
-  def benfordCounts(df: DataFrame, c: String): DataFrame =
-    rel.Quality.benfordCounts(df, c)
-
-  def benfordFromCounts(observed: DataFrame): DataFrame =
-    rel.Quality.benfordFromCounts(observed)
-
-  /** Mantel–Haenszel stratified log-rank: the two-group survival test
-    * adjusted for a confounding stratum
-    * ([[rel.Survival.logRankStratified]]).
-    */
-  def logRankStratified(df: DataFrame, duration: String = "t",
-      event: String = "e", group: String = "g",
-      stratum: String = "s"): DataFrame =
-    rel.Survival.logRankStratified(df, duration, event, group, stratum)
-
-  /** Restricted mean survival time per group — the exact KM step
-    * integral to tau ([[rel.Survival.rmst]]).
-    */
-  def rmst(df: DataFrame, tau: Long, duration: String = "t",
-      event: String = "e", group: String = "g"): DataFrame =
-    rel.Survival.rmst(df, tau, duration, event, group)
-
-  /** Aalen–Johansen competing-risks cumulative incidence
-    * ([[rel.Survival.competingRisks]]).
-    */
-  def competingRisks(df: DataFrame, duration: String = "t",
-      cause: String = "c"): DataFrame =
-    rel.Survival.competingRisks(df, duration, cause)
-
-  /** Harrell's concordance index over (t, e, integer score) units
-    * ([[rel.Survival.concordanceIndex]]).
-    */
-  def concordanceIndex(df: DataFrame, duration: String = "t",
-      event: String = "e", score: String = "s"): DataFrame =
-    rel.Survival.concordanceIndex(df, duration, event, score)
-
-  /** Cox proportional hazards, single covariate, Breslow ties —
-    * replayable fixed-round Newton in integer micro-units
-    * ([[rel.Survival.coxPh]]).
-    */
-  def coxPh(df: DataFrame, duration: String = "t", event: String = "e",
-      covariate: String = "x", iters: Int = 8): DataFrame =
-    rel.Survival.coxPh(df, duration, event, covariate, iters)
-
-  /** Stratified Cox PH: shared effect, per-stratum baseline hazard
-    * ([[rel.Survival.coxPhStratified]]).
-    */
-  def coxPhStratified(df: DataFrame, duration: String = "t",
-      event: String = "e", covariate: String = "x",
-      stratum: String = "s", iters: Int = 8): DataFrame =
-    rel.Survival.coxPhStratified(df, duration, event, covariate, stratum, iters)
-
-  /** Kendall τ-b rank concordance between two aligned integer series
-    * ([[rel.Series.kendallTau]]).
-    */
-  def kendallTau(df: DataFrame, ord: String, x: String,
-      y: String): DataFrame =
-    rel.Series.kendallTau(df, ord, x, y)
-
-  /** Streaming-legal decontamination audit for a streaming train side
-    * against a static broadcast eval set
-    * ([[llm.Decontam.contaminationAuditStream]]).
-    */
-  def contaminationAuditStream(train: DataFrame, eval: DataFrame,
-      n: Int, id: String = "id", text: String = "text"): DataFrame =
-    llm.Decontam.contaminationAuditStream(train, eval, n, id, text)
-
-  /** k-truss: surviving (a, b, support) edges after triangle-support
-    * peeling to the fixed point ([[graph.Truss.kTruss]]).
-    */
-  def kTruss(spark: SparkSession, edges: DataFrame, k: Int,
-      maxRounds: Int = 8): DataFrame =
-    graph.Truss.kTruss(spark, edges, k, maxRounds)
-
-  /** Heuristic attribution family: linear / U-shaped position /
-    * time-decay credits per channel
-    * ([[rel.Attribution.ruleAttribution]]).
-    */
-  def ruleAttribution(events: DataFrame, channels: Seq[String],
-      convType: String, halfLifeDays: Int = 1): DataFrame =
-    rel.Attribution.ruleAttribution(events, channels, convType,
-      halfLifeDays)
-
-  /** Newman–Girvan modularity of a node partition, exact-integer
-    * numerators ([[graph.Modularity.modularity]]).
-    */
-  def modularity(spark: SparkSession, edges: DataFrame,
-      labels: DataFrame): DataFrame =
-    graph.Modularity.modularity(spark, edges, labels)
-
-  /** Deterministic synchronous label-propagation communities over an
-    * undirected edge list ([[graph.LabelProp.propagate]]).
-    */
-  def labelPropagate(spark: SparkSession, edges: DataFrame,
-      rounds: Int): DataFrame =
-    graph.LabelProp.propagate(spark, edges, rounds)
-
-  /** Community DETECTION with its quality readout: LPA proposes a
-    * partition, modularity scores it ([[graph.LabelProp.lpaCommunities]]).
-    */
-  def lpaCommunities(spark: SparkSession, edges: DataFrame,
-      rounds: Int): DataFrame =
-    graph.LabelProp.lpaCommunities(spark, edges, rounds)
-
-  /** Louvain-style one-level local moving, deterministic 2-coloring
-    * schedule ([[graph.Louvain.localMove]]).
-    */
-  def louvainMove(spark: SparkSession, edges: DataFrame,
-      rounds: Int): DataFrame =
-    graph.Louvain.localMove(spark, edges, rounds)
-
-  /** Local-moving partition scored by the exact-integer modularity
-    * report ([[graph.Louvain.louvainCommunities]]).
-    */
-  def louvainCommunities(spark: SparkSession, edges: DataFrame,
-      rounds: Int): DataFrame =
-    graph.Louvain.louvainCommunities(spark, edges, rounds)
-
-  /** Group-sequential z-monitoring against O'Brien–Fleming boundaries
-    * over per-look snapshot units ([[rel.Experiment.groupSequential]]).
-    */
-  def groupSequential(units: DataFrame, lookCol: String,
-      variant: String = "variant", value: String = "y"): DataFrame =
-    rel.Experiment.groupSequential(units, lookCol, variant, value)
-
-  /** Cumulative gains / lift table over a scored population, exact
-    * milli via the GlobalRank decomposition ([[llm.Eval.liftTable]]).
-    */
-  def liftTable(df: DataFrame, score: Column, label: Column,
-      tiebreak: Column, k: Int = 10): DataFrame =
-    llm.Eval.liftTable(df, score, label, tiebreak, k)
-
-  /** Trigram posting table for infix search
-    * ([[llm.Trigram.buildTrigramPostings]]) and the accelerated
-    * `LIKE '%pattern%'` through it ([[llm.Trigram.likeSearch]]).
-    */
-  def buildTrigramPostings(docs: DataFrame, id: String = "id",
-      text: String = "text"): DataFrame =
-    llm.Trigram.buildTrigramPostings(docs, id, text)
-
-  /** Persisted trigram index lifecycle: build ([[llm.Trigram.saveTrigram]]),
-    * pruned-bucket probe ([[llm.Trigram.probeTrigram]]), streaming
-    * append ([[llm.Trigram.appendTrigramStream]]) and compaction
-    * ([[llm.Trigram.compactTrigram]]).
-    */
-  def saveTrigram(spark: SparkSession, docs: DataFrame, dir: String,
-      buckets: Int = 64, id: String = "id", text: String = "text"): Unit =
-    llm.Trigram.saveTrigram(spark, docs, dir, buckets, id, text)
-
-  def probeTrigram(spark: SparkSession, dir: String, pattern: String,
-      buckets: Int = 64, id: String = "id", text: String = "text"): DataFrame =
-    llm.Trigram.probeTrigram(spark, dir, pattern, buckets, id, text)
-
-  def appendTrigramStream(spark: SparkSession, stream: DataFrame, dir: String,
-      checkpoint: String, buckets: Int = 64,
-      id: String = "id", text: String = "text")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    llm.Trigram.appendTrigramStream(spark, stream, dir, checkpoint, buckets, id, text)
-
-  def compactTrigram(spark: SparkSession, dir: String, id: String = "id"): Unit =
-    llm.Trigram.compactTrigram(spark, dir, id)
-
-  def likeSearch(spark: SparkSession, docs: DataFrame, postings: DataFrame,
-      pattern: String, id: String = "id", text: String = "text"): DataFrame =
-    llm.Trigram.likeSearch(spark, docs, postings, pattern, id, text)
-
-  /** Multinomial naive Bayes: train the micro-quantized word model
-    * over a df-floored vocabulary ([[llm.NaiveBayes.naiveBayesModel]])
-    * or self-classify to a confusion matrix
-    * ([[llm.NaiveBayes.naiveBayesConfusion]]).
-    */
-  def naiveBayesModel(spark: SparkSession, docs: DataFrame, minDf: Long,
-      text: String = "text", label: String = "lang",
-      id: String = "doc_id"): DataFrame =
-    llm.NaiveBayes.naiveBayesModel(spark, docs, minDf, text, label, id)
-
-  def naiveBayesConfusion(spark: SparkSession, docs: DataFrame, minDf: Long,
-      id: String = "doc_id", text: String = "text",
-      label: String = "lang"): DataFrame =
-    llm.NaiveBayes.naiveBayesConfusion(spark, docs, minDf, id, text, label)
-
-  /** Propensity-score 1-NN caliper matching ATT on the integer
-    * logistic propensity ([[rel.Logistic.psmAtt]]).
-    */
-  def psmAtt(df: DataFrame, id: String = "user_id",
-      treat: String = "treat", outcome: String = "yo",
-      covariate: String = "x", iters: Int = 8,
-      caliperMicro: Long = 50000L): DataFrame =
-    rel.Logistic.psmAtt(df, id, treat, outcome, covariate, iters,
-      caliperMicro)
-
-  /** Doubly-robust AIPW ATE: clipped logistic propensity + per-arm
-    * quantized OLS outcome models ([[rel.Logistic.aipwAte]]).
-    */
-  def aipwAte(df: DataFrame, treat: String = "treat",
-      outcome: String = "yo", covariate: String = "x", iters: Int = 8,
-      clipMilli: Int = 10): DataFrame =
-    rel.Logistic.aipwAte(df, treat, outcome, covariate, iters, clipMilli)
-
-  /** Instrumental-variable Wald LATE with weak/degenerate-instrument
-    * guards ([[rel.Causal.ivWald]]).
-    */
-  def ivWald(df: DataFrame, instrument: String = "z",
-      treat: String = "t", y: String = "y"): DataFrame =
-    rel.Causal.ivWald(df, instrument, treat, y)
-
-  /** Two-model uplift (T-learner) with the fixed-width decile Qini
-    * readout ([[rel.Logistic.upliftQini]]).
-    */
-  def upliftQini(df: DataFrame, treat: String = "treat", y: String = "y",
-      covariate: String = "x", iters: Int = 8,
-      binWidthMicro: Long = 200000L): DataFrame =
-    rel.Logistic.upliftQini(df, treat, y, covariate, iters, binWidthMicro)
-
-  /** K-fold cross-validated held-out AUC of the logistic model over
-    * salt-keyed md5 folds ([[rel.Logistic.kFoldCvAuc]]).
-    */
-  def kFoldCvAuc(df: DataFrame, label: String = "y",
-      covariate: String = "x", id: String = "user_id", folds: Int = 3,
-      iters: Int = 6, salt: String = "cv384"): DataFrame =
-    rel.Logistic.kFoldCvAuc(df, label, covariate, id, folds, iters, salt)
-
-  /** Two-covariate logistic regression by fixed-round 3×3 Newton
-    * ([[rel.Logistic.logisticFit2]]), its deployable model/scorer
-    * pair, and the exact feature-Shapley AUC attribution
-    * ([[rel.Logistic.featureShapleyAuc]]).
-    */
-  def logisticFit2(df: DataFrame, label: String = "y",
-      cov1: String = "x1", cov2: String = "x2",
-      iters: Int = 8): DataFrame =
-    rel.Logistic.logisticFit2(df, label, cov1, cov2, iters)
-
-  def logistic2Model(df: DataFrame, label: String = "y",
-      cov1: String = "x1", cov2: String = "x2",
-      iters: Int = 8): DataFrame =
-    rel.Logistic.logistic2Model(df, label, cov1, cov2, iters)
-
-  def scoreLogistic2(units: DataFrame, model: DataFrame,
-      cov1: String = "x1", cov2: String = "x2"): DataFrame =
-    rel.Logistic.scoreLogistic2(units, model, cov1, cov2)
-
-  def featureShapleyAuc(df: DataFrame, label: String = "y",
-      cov1: String = "x1", cov2: String = "x2",
-      iters: Int = 6): DataFrame =
-    rel.Logistic.featureShapleyAuc(df, label, cov1, cov2, iters)
-
-  /** Gradient-boosted regression stumps: the per-round model trace
-    * (split, leaves, gain, post-round RMSE)
-    * ([[rel.Tree.boostedStumps]]).
-    */
-  def boostedStumps(df: DataFrame, features: Seq[String],
-      label: String = "ym", rounds: Int = 4): DataFrame =
-    rel.Tree.boostedStumps(df, features, label, rounds)
-
-  /** Sampled-source Brandes betweenness with a fixed hop horizon
-    * ([[graph.Betweenness.betweenness]]).
-    */
-  def betweenness(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
-      maxHops: Int): DataFrame =
-    graph.Betweenness.betweenness(spark, edges, seeds, maxHops)
-
-  /** Harmonic centrality: the exact bounded-horizon rung
-    * ([[graph.Anf.harmonicExact]]) and the linear-state HyperBall rung
-    * ([[graph.Anf.harmonicHyperball]]).
-    */
-  def harmonicExact(spark: SparkSession, edges: DataFrame, maxT: Int,
-      k: Int): DataFrame =
-    graph.Anf.harmonicExact(spark, edges, maxT, k)
-
-  def harmonicHyperball(spark: SparkSession, edges: DataFrame, maxT: Int,
-      k: Int): DataFrame =
-    graph.Anf.harmonicHyperball(spark, edges, maxT, k)
-
-  /** Deterministic hash-drawn random-walk corpus
-    * ([[graph.Walks.deterministicWalks]]).
-    */
-  def deterministicWalks(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame, steps: Int, salt: String): DataFrame =
-    graph.Walks.deterministicWalks(spark, edges, seeds, steps, salt)
-
-  /** TextRank corpus keywords over the windowed co-occurrence graph
-    * ([[llm.TextRank.textRankKeywords]]).
-    */
-  def textRankKeywords(spark: SparkSession, docs: DataFrame,
-      window: Int = 2, minCount: Long = 5, iters: Int = 5, k: Int = 20,
-      text: String = "text"): DataFrame =
-    llm.TextRank.textRankKeywords(spark, docs, window, minCount, iters,
-      k, text)
-
-  /** Dominant spectral axis of the PPMI term graph by integer power
-    * iteration ([[llm.TextRank.spectralTermAxis]]).
-    */
-  def spectralTermAxis(spark: SparkSession, docs: DataFrame,
-      window: Int = 2, minCount: Long = 5, iters: Int = 5, k: Int = 15,
-      text: String = "text"): DataFrame =
-    llm.TextRank.spectralTermAxis(spark, docs, window, minCount, iters,
-      k, text)
-
-  /** Replayable negative-sampling draws from the smoothed unigram
-    * distribution ([[llm.NegSample.negativeSamples]]).
-    */
-  def negativeSamples(spark: SparkSession, docs: DataFrame, k: Int,
-      minCount: Long, salt: String, top: Int = 25,
-      id: String = "doc_id", text: String = "text"): DataFrame =
-    llm.NegSample.negativeSamples(spark, docs, k, minCount, salt, top,
-      id, text)
-
-  /** Frozen-model naive Bayes scoring
-    * ([[llm.NaiveBayes.naiveBayesScore]]) and self-classification
-    * predictions ([[llm.NaiveBayes.naiveBayesPredict]]).
-    */
-  def naiveBayesScore(docs: DataFrame, model: DataFrame,
-      id: String = "doc_id", text: String = "text",
-      label: String = "lang"): DataFrame =
-    llm.NaiveBayes.naiveBayesScore(docs, model, id, text, label)
-
-  def naiveBayesPredict(spark: SparkSession, docs: DataFrame, minDf: Long,
-      id: String = "doc_id", text: String = "text",
-      label: String = "lang"): DataFrame =
-    llm.NaiveBayes.naiveBayesPredict(spark, docs, minDf, id, text, label)
-
-  /** McNemar's paired disagreement test between the word NB and the
-    * character-trigram classifier
-    * ([[llm.NaiveBayes.mcnemarNbVsTrigram]]).
-    */
-  def mcnemarNbVsTrigram(spark: SparkSession, docs: DataFrame,
-      minDf: Long): DataFrame =
-    llm.NaiveBayes.mcnemarNbVsTrigram(spark, docs, minDf)
-
-  /** Leave-one-bucket-out source valuation
-    * ([[llm.NaiveBayes.sourceValuation]]).
-    */
-  def sourceValuation(spark: SparkSession, docs: DataFrame, minDf: Long,
-      buckets: Int, salt: String, source: String = "source",
-      id: String = "doc_id", text: String = "text",
-      label: String = "lang"): DataFrame =
-    llm.NaiveBayes.sourceValuation(spark, docs, minDf, buckets, salt,
-      source, id, text, label)
-
-  /** Active-learning uncertainty batch
-    * ([[rel.Logistic.uncertaintyBatch]]).
-    */
-  def uncertaintyBatch(df: DataFrame, label: String = "y",
-      covariate: String = "x", id: String = "user_id", iters: Int = 6,
-      k: Int = 20): DataFrame =
-    rel.Logistic.uncertaintyBatch(df, label, covariate, id, iters, k)
-
-  /** Label-noise relabel queue by self-confidence margin
-    * ([[llm.NaiveBayes.labelNoiseAudit]]) and the per-class
-    * precision/recall/F1 report ([[llm.NaiveBayes.classifierReport]]).
-    */
-  def labelNoiseAudit(spark: SparkSession, docs: DataFrame, minDf: Long,
-      k: Int, id: String = "doc_id", text: String = "text",
-      label: String = "lang"): DataFrame =
-    llm.NaiveBayes.labelNoiseAudit(spark, docs, minDf, k, id, text, label)
-
-  def classifierReport(spark: SparkSession, docs: DataFrame,
-      minDf: Long): DataFrame =
-    llm.NaiveBayes.classifierReport(spark, docs, minDf)
-
-  /** Count-Min inner-product join-size estimate
-    * ([[llm.SketchAggOps.cmsJoinSize]]).
-    */
-  def cmsJoinSize(left: DataFrame, lkey: String, right: DataFrame,
-      rkey: String, depth: Int = 4, width: Int = 512): DataFrame =
-    llm.SketchAggOps.cmsJoinSize(left, lkey, right, rkey, depth, width)
-
-  /** Embedding-distribution drift between two snapshot windows
-    * ([[llm.EmbedDrift.embeddingDrift]]).
-    */
-  def embeddingDrift(df: DataFrame, isRef: Column,
-      vec: String = "embedding"): DataFrame =
-    llm.EmbedDrift.embeddingDrift(df, isRef, vec)
-
-  /** More-like-this: probe-document TF-IDF terms through BM25 with
-    * the probe excluded ([[llm.Lexical.moreLikeThis]]).
-    */
-  def moreLikeThis(spark: SparkSession, docs: DataFrame,
-      probeIds: Seq[Long], nTerms: Int = 5, k: Int = 5,
-      id: String = "doc_id", text: String = "text"): DataFrame =
-    llm.Lexical.moreLikeThis(spark, docs, probeIds, nTerms, k, id, text)
-
-  /** One-row corpus training-readiness report
-    * ([[rel.Profile.corpusReport]]).
-    */
-  def corpusReport(spark: SparkSession, docs: DataFrame,
-      id: String = "doc_id", text: String = "text",
-      lang: String = "lang"): DataFrame =
-    rel.Profile.corpusReport(spark, docs, id, text, lang)
-
-  /** Population stability index drift monitor over fixed-width bins
-    * ([[rel.Quality.psi]]), the exact KS drift statistic
-    * ([[rel.Quality.ksDrift]]), and Cramér's V independence
-    * ([[rel.Categorical.cramersV]]).
-    */
-  def psi(df: DataFrame, isRef: Column, value: Column, binWidth: Long,
-      bins: Int): DataFrame =
-    rel.Quality.psi(df, isRef, value, binWidth, bins)
-
-  def ksDrift(df: DataFrame, isRef: Column, value: Column): DataFrame =
-    rel.Quality.ksDrift(df, isRef, value)
-
-  def cramersV(df: DataFrame, a: String, b: String): DataFrame =
-    rel.Categorical.cramersV(df, a, b)
-
-  /** Cohen's d / Hedges' g standardized effect size
-    * ([[rel.Experiment.cohensD]]).
-    */
-  def cohensD(df: DataFrame, variant: String = "variant",
-      value: String = "y"): DataFrame =
-    rel.Experiment.cohensD(df, variant, value)
-
-  /** Mutual-information term selection, the χ² companion
-    * ([[llm.Features.miTerms]]).
-    */
-  def miTerms(spark: SparkSession, docs: DataFrame, k: Int, minDf: Long,
-      id: String = "doc_id", text: String = "text",
-      label: String = "lang"): DataFrame =
-    llm.Features.miTerms(spark, docs, k, minDf, id, text, label)
-
-  /** Node-embedding axis from the deterministic walk corpus
-    * ([[graph.Walks.nodeEmbeddingAxis]]).
-    */
-  def nodeEmbeddingAxis(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame, steps: Int, salt: String, minCount: Long = 2,
-      iters: Int = 5, k: Int = 15): DataFrame =
-    graph.Walks.nodeEmbeddingAxis(spark, edges, seeds, steps, salt,
-      minCount, iters, k)
-
-  // ------------------------------------------------------- round 13
-
-  /** Baseline JFIF decode to the shared grayscale contract
-    * ([[io.Jpeg.parse]]); [[io.Jpeg.buildGray]] is the fixture
-    * encoder.
-    */
-  def jpegDecode(bytes: Array[Byte]): io.Bmp.Gray = io.Jpeg.parse(bytes)
-
-  /** JPEG perceptual near-dup pairs — the q93/q347 machinery on the
-    * dominant crawl format ([[llm.ImageOps.imagePerceptualDupsJpeg]]).
-    */
-  def imagePerceptualDupsJpeg(spark: SparkSession, blobs: DataFrame,
-      maxHamming: Int = 8, id: String = "doc_id",
-      img: String = "img"): DataFrame =
-    llm.ImageOps.imagePerceptualDupsJpeg(spark, blobs, maxHamming, id, img)
-
-  /** Unicode normalization column: NFKC + casefold + format/control
-    * strip + whitespace collapse ([[functions.TextNorm]], codegen'd).
-    */
-  def normalizeText(spark: SparkSession, c: Column): Column =
-    functions.TextNorm.normalizeText(spark, c)
-
-  /** Classic two-level Louvain: move + quotient aggregation + re-move
-    * ([[graph.Louvain.louvainTwoLevel]]).
-    */
-  def louvainTwoLevel(spark: SparkSession, edges: DataFrame,
-      rounds1: Int, rounds2: Int): DataFrame =
-    graph.Louvain.louvainTwoLevel(spark, edges, rounds1, rounds2)
-
-  /** Grouped PR curve + average precision — the imbalanced-data twin
-    * of [[groupedAuc]] ([[llm.Eval.groupedPrCurve]]).
-    */
-  def groupedPrCurve(df: DataFrame, group: Column, score: Column,
-      label: Column): DataFrame =
-    llm.Eval.groupedPrCurve(df, group, score, label)
-
-  /** Heaps'-law vocabulary-growth fit ([[llm.TextStats.heapsLaw]]). */
-  def heapsLaw(spark: SparkSession, docs: DataFrame, buckets: Int = 32,
-      id: String = "doc_id", text: String = "text"): DataFrame =
-    llm.TextStats.heapsLaw(spark, docs, buckets, id, text)
-
-  /** Perplexity filter — the Gopher/CCNet LM-quality gate
-    * ([[llm.Curation.perplexityFilter]]).
-    */
-  def perplexityFilter(spark: SparkSession, docs: DataFrame, tau: Double,
-      refLang: String = "en"): DataFrame =
-    llm.Curation.perplexityFilter(spark, docs, tau, refLang)
-
-  /** Matryoshka dimension-truncation recall curve
-    * ([[llm.Eval.matryoshkaRecall]]).
-    */
-  def matryoshkaRecall(spark: SparkSession, embs: DataFrame,
-      dims: Seq[Int] = Seq(8, 16, 32), k: Int = 10,
-      querySkip: Long = 29L): DataFrame =
-    llm.Eval.matryoshkaRecall(spark, embs, dims, k, querySkip)
-
-  /** N-gram novelty curve at doc-id checkpoints
-    * ([[llm.Curation.gramNovelty]]).
-    */
-  def gramNovelty(spark: SparkSession, docs: DataFrame, k: Int = 8,
-      buckets: Int = 32): DataFrame =
-    llm.Curation.gramNovelty(spark, docs, k, buckets)
-
-  /** Cross-source near-dup pair matrix ([[llm.Dedup.sourceDupMatrix]]). */
-  def sourceDupMatrix(spark: SparkSession, docs: DataFrame,
-      minJaccard: Double): DataFrame =
-    llm.Dedup.sourceDupMatrix(spark, docs, minJaccard)
-
-  /** Gopher within-doc repetition filter
-    * ([[llm.Curation.repetitionFilter]]).
-    */
-  def repetitionFilter(spark: SparkSession, docs: DataFrame,
-      top2Milli: Long = 200L, top3Milli: Long = 180L,
-      dup6Milli: Long = 300L): DataFrame =
-    llm.Curation.repetitionFilter(spark, docs, top2Milli, top3Milli,
-      dup6Milli)
-
-  /** Source-priority near-dup survivor resolution
-    * ([[llm.Dedup.priorityDedup]]).
-    */
-  def priorityDedup(spark: SparkSession, docs: DataFrame, prio: Column,
-      minJaccard: Double): DataFrame =
-    llm.Dedup.priorityDedup(spark, docs, prio, minJaccard)
-
-  /** URL canonicalization + per-domain collapse counts
-    * ([[llm.Curation.urlCanonicalDedup]]).
-    */
-  def urlCanonicalDedup(spark: SparkSession, docs: DataFrame,
-      id: String = "doc_id", url: String = "url"): DataFrame =
-    llm.Curation.urlCanonicalDedup(spark, docs, id, url)
-
-  /** Gopher structural quality gates
-    * ([[llm.Curation.gopherQualityRules]]).
-    */
-  def gopherQualityRules(spark: SparkSession, docs: DataFrame,
-      minWords: Long = 50L, maxWords: Long = 100000L): DataFrame =
-    llm.Curation.gopherQualityRules(spark, docs, minWords, maxWords)
-
-  /** Degree-distribution power-law fit
-    * ([[graph.Assortativity.degreePowerlaw]]).
-    */
-  def degreePowerlaw(spark: SparkSession, edges: DataFrame): DataFrame =
-    graph.Assortativity.degreePowerlaw(spark, edges)
-
-  /** Per-doc Gopher flags, streaming-legal — the q420 ingest gate
-    * ([[llm.Curation.gopherFlags]]).
-    */
-  def gopherFlags(docs: DataFrame, minWords: Long = 50L,
-      maxWords: Long = 100000L): DataFrame =
-    llm.Curation.gopherFlags(docs, minWords, maxWords)
-
-  /** Lexical IDF drift between corpus halves
-    * ([[llm.Curation.idfDrift]]).
-    */
-  def idfDrift(spark: SparkSession, docs: DataFrame, k: Int = 25,
-      minDfTotal: Long = 10L): DataFrame =
-    llm.Curation.idfDrift(spark, docs, k, minDfTotal)
-
-  /** Exact dedup after Unicode normalization
-    * ([[llm.Curation.normalizedDedup]]).
-    */
-  def normalizedDedup(spark: SparkSession, docs: DataFrame): DataFrame =
-    llm.Curation.normalizedDedup(spark, docs)
-
-  /** Vocabulary coverage curve at doubling rungs
-    * ([[llm.TextStats.vocabCoverageCurve]]).
-    */
-  def vocabCoverageCurve(spark: SparkSession, docs: DataFrame,
-      maxLogK: Int = 12): DataFrame =
-    llm.TextStats.vocabCoverageCurve(spark, docs, maxLogK)
-
-  /** Embedding-space decontamination — max eval-set cosine per train
-    * vector, review queue at tau ([[llm.Decontam.semanticDecontam]]).
-    */
-  def semanticDecontam(spark: SparkSession, train: DataFrame,
-      eval: DataFrame, tauMilli: Long): DataFrame =
-    llm.Decontam.semanticDecontam(spark, train, eval, tauMilli)
-
-  /** Data-constrained epoch water-filling allocator
-    * ([[llm.Curation.epochWaterfill]]).
-    */
-  def epochWaterfill(spark: SparkSession, docs: DataFrame,
-      capMilli: Column, budgetMilliOf: Column => Column): DataFrame =
-    llm.Curation.epochWaterfill(spark, docs, capMilli, budgetMilliOf)
-
-  /** WebDataset-style ustar training shards with strict round-trip
-    * ([[llm.Pack.webdatasetShards]]; codec [[io.Tar]]).
-    */
-  def webdatasetShards(spark: SparkSession, docs: DataFrame,
-      shards: Int): DataFrame =
-    llm.Pack.webdatasetShards(spark, docs, shards)
-
-  /** Streaming WebDataset shard sink with exactly-once manifest
-    * semantics under checkpoint replay
-    * ([[llm.Pack.streamShardSink]]; codec [[io.Tar]]).
-    */
-  def streamShardSink(spark: SparkSession, dir: String,
-      slots: Int = 4): DataFrame =
-    llm.Pack.streamShardSink(spark, dir, slots)
-
-  /** Materialized curated shards: gates -> dedup -> WebDataset tars
-    * ([[llm.Curation.curatedShards]]).
-    */
-  def curatedShards(spark: SparkSession, docs: DataFrame,
-      shards: Int = 4): DataFrame =
-    llm.Curation.curatedShards(spark, docs, shards)
-
-  /** Cross-source smoothed-LM divergence matrix
-    * ([[llm.Curation.sourceLmMatrix]]).
-    */
-  def sourceLmMatrix(spark: SparkSession, docs: DataFrame): DataFrame =
-    llm.Curation.sourceLmMatrix(spark, docs)
-
-  /** Duplicate-class size histogram over normalized equality classes
-    * ([[llm.Curation.dupClassHistogram]]).
-    */
-  def dupClassHistogram(spark: SparkSession, docs: DataFrame): DataFrame =
-    llm.Curation.dupClassHistogram(spark, docs)
-
-  /** Packing-efficiency sweep over candidate context lengths
-    * ([[llm.Pack.packEfficiencySweep]]).
-    */
-  def packEfficiencySweep(spark: SparkSession, docs: DataFrame,
-      settings: Seq[Long] = Seq(128L, 256L, 512L, 1024L)): DataFrame =
-    llm.Pack.packEfficiencySweep(spark, docs, settings)
-
-  /** Stratified low-discrepancy shard-interleave training schedule
-    * ([[llm.Pack.shardInterleave]]).
-    */
-  def shardInterleave(spark: SparkSession, docs: DataFrame,
-      docsPerShard: Long = 64): DataFrame =
-    llm.Pack.shardInterleave(spark, docs, docsPerShard)
-
-  /** Multimodal image+caption WebDataset shards
-    * ([[llm.Pack.multimodalShards]]; codecs [[io.Tar]], [[io.Bmp]]).
-    */
-  def multimodalShards(spark: SparkSession, docs: DataFrame,
-      shards: Int): DataFrame =
-    llm.Pack.multimodalShards(spark, docs, shards)
-
-  /** Prefix-proportionality audit of the interleave schedule
-    * ([[llm.Pack.interleaveDiscrepancy]]).
-    */
-  def interleaveDiscrepancy(spark: SparkSession, docs: DataFrame,
-      docsPerShard: Long = 64): DataFrame =
-    llm.Pack.interleaveDiscrepancy(spark, docs, docsPerShard)
-
-  /** Streaming curated shards: gates -> cross-batch dedup -> tars
-    * with exactly-once artifacts ([[llm.Pack.streamCuratedShards]]).
-    */
-  def streamCuratedShards(spark: SparkSession, dir: String,
-      slots: Int = 4): DataFrame =
-    llm.Pack.streamCuratedShards(spark, dir, slots)
-
-  /** Composed end-to-end training-data plan: Gopher gates ->
-    * normalized dedup -> temperature mixture -> epoch water-filling
-    * -> shard manifest, one shared corpus scan
-    * ([[llm.Curation.trainingDataPlan]]).
-    */
-  def trainingDataPlan(spark: SparkSession, docs: DataFrame,
-      shardTokens: Long = 4096L): DataFrame =
-    llm.Curation.trainingDataPlan(spark, docs, shardTokens)
-
-  /** Batch WebDataset tar-shard FILE writer — `shard_<k>.tar` files
-    * under `dir`, the layout [[readWdsShards]] mounts back
-    * ([[llm.Pack.writeTarShards]]; codec [[io.Tar]]).
-    */
-  def writeTarShards(spark: SparkSession, docs: DataFrame, dir: String,
-      shards: Int): DataFrame =
-    llm.Pack.writeTarShards(spark, docs, dir, shards)
-
-  /** Mount a directory of WebDataset tar shards as a table — one row
-    * per member (shard, key, ext, size, payload), with shard-file
-    * pruning and decode-skipping projection
-    * ([[sources.WdsDataSource]]).
-    */
-  def readWdsShards(spark: SparkSession, dir: String): DataFrame =
-    spark.read.format("wds-shards").load(dir)
-
-  /** Write `(key, ext, payload)` member rows as WebDataset tar shards
-    * through the DataSource V2 two-phase commit sink — one shard per
-    * non-empty partition, streamed in constant memory, temp files
-    * published by the driver commit ([[sources.WdsDataSource]]).
-    */
-  def writeWdsShards(spark: SparkSession, members: DataFrame, dir: String,
-      overwrite: Boolean = false): Unit =
-    members.write.format("wds-shards")
-      .mode(if (overwrite) "overwrite" else "append").save(dir)
-
-  /** Persist the trained BPE tokenizer artifact: merges in training
-    * order + the closed emission vocabulary
-    * ([[llm.Bpe.saveTokenizer]]).
-    */
-  def saveTokenizer(spark: SparkSession, docs: DataFrame,
-      merges: Seq[llm.Bpe.Merge], dir: String): Unit =
-    llm.Bpe.saveTokenizer(spark, docs, merges, dir)
-
-  /** Load a persisted BPE tokenizer artifact
-    * ([[llm.Bpe.loadTokenizer]]).
-    */
-  def loadTokenizer(spark: SparkSession, dir: String): llm.Bpe.Tokenizer =
-    llm.Bpe.loadTokenizer(spark, dir)
-
-  /** Serve per-doc token-id stats (count, id sum, loud OOV count)
-    * from a loaded tokenizer artifact ([[llm.Bpe.tokenIdStats]]).
-    */
-  def tokenIdStats(spark: SparkSession, docs: DataFrame,
-      tokenizer: llm.Bpe.Tokenizer): DataFrame =
-    llm.Bpe.tokenIdStats(spark, docs, tokenizer)
-
-  /** Materialized interleaved curriculum: per-source seeded-hash
-    * shuffle × shards × the stratified schedule, composed into one
-    * doc-level consumption order
-    * ([[llm.Pack.interleavedCurriculum]]).
-    */
-  def interleavedCurriculum(spark: SparkSession, docs: DataFrame,
-      docsPerShard: Long = 64, seed: Long = 5L): DataFrame =
-    llm.Pack.interleavedCurriculum(spark, docs, docsPerShard, seed)
-
-  /** Multimodal image+caption WebDataset shards with REAL JPEG
-    * members, writer-side bit-exact decode round-trip
-    * ([[llm.Pack.multimodalJpegShards]]; codecs [[io.Tar]],
-    * [[io.Jpeg]]).
-    */
-  def multimodalJpegShards(spark: SparkSession, docs: DataFrame,
-      shards: Int): DataFrame =
-    llm.Pack.multimodalJpegShards(spark, docs, shards)
-
-  /** Multimodal JPEG+caption tar-shard FILE writer
-    * ([[llm.Pack.writeMultimodalTarShards]]).
-    */
-  def writeMultimodalTarShards(spark: SparkSession, docs: DataFrame,
-      dir: String, shards: Int): DataFrame =
-    llm.Pack.writeMultimodalTarShards(spark, docs, dir, shards)
-
-  /** Loader-side WebDataset sample assembly: mount a multimodal shard
-    * directory, group members by key, decode and verify each sample
-    * ([[llm.Pack.pairMultimodalSamples]]).
-    */
-  def pairMultimodalSamples(spark: SparkSession, dir: String): DataFrame =
-    llm.Pack.pairMultimodalSamples(spark, dir)
-
-  /** Native streaming WebDataset sink harness: `writeStream` through
-    * the wds-shards DSv2 sink (epoch-encoded shard names, exactly-once
-    * publish) against pinned arrival slices, mounted back through the
-    * reader ([[llm.Pack.streamWdsSink]]).
-    */
-  def streamWdsSink(spark: SparkSession, dir: String,
-      slots: Int = 4): DataFrame =
-    llm.Pack.streamWdsSink(spark, dir, slots)
-
-  /** Streaming shard SOURCE harness: `readStream` follows a shard
-    * directory as new shards are published, consuming each exactly
-    * once in shard-id order through the header-only scan path
-    * ([[llm.Pack.streamWdsSource]]).
-    */
-  def streamWdsSource(spark: SparkSession, dir: String): DataFrame =
-    llm.Pack.streamWdsSource(spark, dir)
-
-  /** Compact a WebDataset shard store into `targetMembers`-member
-    * shards, preserving the global consumption order
-    * ([[llm.Pack.compactWdsShards]]).
-    */
-  def compactWdsShards(spark: SparkSession, dir: String, outDir: String,
-      targetMembers: Long): DataFrame =
-    llm.Pack.compactWdsShards(spark, dir, outDir, targetMembers)
-
-  /** Continuation-train an existing BPE merge list by `numExtra`
-    * merges — the append half of the tokenizer lifecycle; extend-by-k
-    * equals train-(n+k) exactly ([[llm.Bpe.extendMerges]]).
-    */
-  def extendMerges(spark: SparkSession, docs: DataFrame,
-      merges: Seq[llm.Bpe.Merge], numExtra: Int): Seq[llm.Bpe.Merge] =
-    llm.Bpe.extendMerges(spark, docs, merges, numExtra)
 }

@@ -243,6 +243,10 @@ object LocalAffine {
       displacement: Boolean = true): BlockGrid = {
     require(changed.nonEmpty, "refield needs at least one changed affine")
     val grid = affines.gridDims
+    changed.foreach { bi =>
+      require(bi.inGrid(grid), s"refield: changed affine (${bi.bx},${bi.by},${bi.bz}) " +
+        s"is outside the ${grid.mkString("x")} affine grid")
+    }
     val bs = blocksize.clone()
     requireValidOverlap(bs, overlap)
     val meta = GridMeta(shape.clone(), bs, Array(0, 0, 0), grid.clone(), components = 3)

@@ -355,12 +355,6 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
     BlockGrid(newMeta, merged)
   }
 
-  /** Collect into one dense row-major float buffer (tests / small outputs
-    * only — the 100 TB path writes Parquet instead, see graft.io).
-    * Blocks are placed at their chunk origin (bi*blocksize on regular
-    * grids, the chunk-extent prefix sum on irregular ones); partial edge
-    * blocks (post-crop) use their own extents.
-    */
   /** MULTISCALE DOWNSAMPLE — mean-pool by `factor` per axis: the pyramid
     * level every microscopy stitching pipeline emits after fusion (the
     * reference's outputs feed viewers that require pyramids; dask's
@@ -442,6 +436,12 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
     }
   }
 
+  /** Collect into one dense row-major float buffer (tests / small outputs
+    * only — the 100 TB path writes Parquet instead, see graft.io).
+    * Blocks are placed at their chunk origin (bi*blocksize on regular
+    * grids, the chunk-extent prefix sum on irregular ones); partial edge
+    * blocks (post-crop) use their own extents.
+    */
   def collectDense(): Array[Float] = {
     val sx = meta.shape(0).toInt; val sy = meta.shape(1).toInt; val sz = meta.shape(2).toInt
     val c = meta.components

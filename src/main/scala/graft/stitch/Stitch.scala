@@ -140,10 +140,6 @@ object Stitch {
     Block(BlockIndex(tx, ty, tz), bs(0), bs(1), bs(2), c, acc)
   }
 
-  /** Full stitch pipeline: weight -> halo exchange -> per-block sum.
-    * Input chunks must be blocksize + 2*overlap per axis; output chunks
-    * are exactly blocksize (the verified contract of stitch.py:94-121).
-    */
   /** Bounds per axis: o >= 1 (ramps are 2o-1 long); 2o <= bs (the ramp
     * core bs-2o+2 must stay positive AND tile support [t*bs-o, t*bs+bs+o)
     * must only reach +-1 neighbors — beyond that the reference's np.pad
@@ -158,6 +154,10 @@ object Stitch {
           s"(got o=${meta.overlap(ax)}, bs=${meta.blocksize(ax)} on axis $ax)")
     }
 
+  /** Full stitch pipeline: weight -> halo exchange -> per-block sum.
+    * Input chunks must be blocksize + 2*overlap per axis; output chunks
+    * are exactly blocksize (the verified contract of stitch.py:94-121).
+    */
   def stitchBlocks(grid: BlockGrid): BlockGrid = {
     val meta = grid.meta
     val bs = meta.blocksize; val c = meta.components
@@ -197,6 +197,10 @@ object Stitch {
     requireStitchable(meta)
     require(changed.nonEmpty, "restitch needs at least one changed tile")
     val g = meta.blockGrid
+    changed.foreach { bi =>
+      require(bi.inGrid(g), s"restitch: changed tile (${bi.bx},${bi.by},${bi.bz}) " +
+        s"is outside the ${g.mkString("x")} block grid")
+    }
     def inBounds(x: Int, y: Int, z: Int): Boolean =
       x >= 0 && y >= 0 && z >= 0 && x < g(0) && y < g(1) && z < g(2)
     def neighborhood(s: Set[(Int, Int, Int)]): Set[(Int, Int, Int)] =

@@ -76,4 +76,12 @@ class AnfSpec extends SparkSpec {
     intercept[IllegalArgumentException](exact(Seq((1L, 2L)), 0))
     intercept[IllegalArgumentException](exact(Seq((1L, 2L)), 33))
   }
+
+  test("3-node path: exact curve closes at t=2; hll emits one row per t up to maxT") {
+    val pg = Seq((1L, 2L), (2L, 3L))
+    assert(exact(pg, maxT = 3).map(r => (r._1, r._3)) ==
+      Seq((0L, 3L), (1L, 7L), (2L, 9L)))
+    val nh = Anf.neighborhoodFunctionHll(spark, edges(pg), 2).collect()
+    assert(nh.length == 3 && nh.last.getLong(2) == 1000L)
+  }
 }

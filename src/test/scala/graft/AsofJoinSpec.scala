@@ -73,4 +73,25 @@ class AsofJoinSpec extends SparkSpec {
   test("driver entry() returns rows on sf0.001") {
     assert(graft.SparkEntry.entry(spark).count() > 0)
   }
+
+  test("asofTolerance: stale matches null out, fresh matches equal plain asof") {
+    val s = spark
+    import s.implicits._
+    val left = Seq((1L, 100L, "p1"), (1L, 250L, "p2")).toDF("k", "ts", "tag")
+    val right = Seq((1L, 90L, "t_old"), (1L, 240L, "t_new")).toDF("k", "ts", "v")
+    // plain as-of: both purchases match their latest prior touch
+    val plain = AsofJoin.asof(left, right, "k", "ts", Map("v" -> "v"))
+      .collect().map(r => r.getString(2) -> r.getString(3)).toMap
+    assert(plain == Map("p1" -> "t_old", "p2" -> "t_new"))
+    // tolerance 15 micros: p1's match (gap 10) survives, p2's (gap 10)
+    // survives; tolerance 5: both null
+    val tol15 = AsofJoin.asofTolerance(left, right, "k", "ts",
+        Map("v" -> "v"), toleranceMicros = 15L)
+      .collect().map(r => r.getString(2) -> Option(r.getString(3))).toMap
+    assert(tol15 == Map("p1" -> Some("t_old"), "p2" -> Some("t_new")))
+    val tol5 = AsofJoin.asofTolerance(left, right, "k", "ts",
+        Map("v" -> "v"), toleranceMicros = 5L)
+      .collect().map(r => r.getString(2) -> Option(r.getString(3))).toMap
+    assert(tol5 == Map("p1" -> None, "p2" -> None))
+  }
 }

@@ -168,4 +168,25 @@ class BinaryAnnSpec extends SparkSpec {
     assert(hits.toDouble / exact.size >= 0.8,
       s"recall ${hits.toDouble / exact.size} < 0.8")
   }
+
+  test("compactBinary on a duplicate-free index leaves MMR probe output unchanged") {
+    val s = spark
+    import s.implicits._
+    def v(xs: Double*): Seq[Float] = xs.map(_.toFloat)
+    val e = Seq(
+      (0L, v(1.0, 0.00, 0.0)), (1L, v(1.0, 0.02, 0.0)), (2L, v(1.0, 0.04, 0.0)),
+      (3L, v(0.00, 1.0, 0.0)), (4L, v(0.02, 1.0, 0.0)), (5L, v(0.04, 1.0, 0.0)),
+      (6L, v(0.0, 0.0, 1.0))
+    ).toDF("id", "vec")
+    val q = e.filter(col("id") < 2)
+      .select(col("id").as("qid"), col("vec").as("qvec"))
+    val work = java.nio.file.Files.createTempDirectory("binidx-noop")
+    BinaryAnn.saveBinary(s, e, s"$work/bin")
+    def probe = graft.llm.Mmr.mmrProbeBinary(s, s"$work/bin", q,
+        k = 3, poolSize = 5, rerank = 7)
+      .collect().map(_.toSeq).toSeq
+    val before = probe
+    BinaryAnn.compactBinary(s, s"$work/bin")
+    assert(probe == before && before.nonEmpty)
+  }
 }

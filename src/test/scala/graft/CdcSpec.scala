@@ -288,4 +288,16 @@ class CdcSpec extends SparkSpec {
       plan)
     assert(!plan.contains("FullOuter"), plan)
   }
+
+  test("evolving CDC: an add-column upsert lands in the batch and versioned paths") {
+    val sp = s
+    import sp.implicits._
+    val base = Seq((1L, 10L)).toDF("k", "v")
+    val b = Seq((1L, 11L, "x", "U", 1L)).toDF("k", "v", "c", "op", "seq")
+    val snap = Cdc.applyBatchEvolving(base, b, Seq("k"))
+      .collect().map(_.toSeq)
+    assert(snap.toSeq == Seq(Seq(1L, 11L, "x")))
+    val st = Cdc.applyVersionedEvolving(Cdc.bootstrapState(base), b, Seq("k"))
+    assert(st.columns.contains("c"))
+  }
 }

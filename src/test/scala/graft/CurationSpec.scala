@@ -324,4 +324,19 @@ class CurationSpec extends SparkSpec {
     assert(got == Seq(("s1", 2L, kl1), ("s2", 2L, kl2)))
     assert(got.forall(_._3 >= 0.0), "KL is non-negative")
   }
+
+  test("dupClassHistogram: power-of-two buckets land on the planted classes") {
+    val s = spark
+    import s.implicits._
+    // classes of sizes 1, 2, 4, 5 (normalized equality: case and
+    // whitespace runs collapse) -> buckets 0:{1}, 1:{2}, 2:{4,5}
+    val docs = (Seq((0L, "solo")) ++
+      (1L to 2L).map(i => (i, if (i % 2 == 0) "PAIR  text" else "pair text")) ++
+      (3L to 6L).map(i => (i, "quad body")) ++
+      (7L to 11L).map(i => (i, "five member family"))
+    ).toDF("doc_id", "text")
+    val got = Curation.dupClassHistogram(s, docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got == Seq((0L, 1L, 1L), (1L, 1L, 2L), (2L, 2L, 9L)), got)
+  }
 }

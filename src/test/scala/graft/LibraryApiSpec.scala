@@ -114,133 +114,4 @@ class LibraryApiSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(top.subsetOf(mh), s"missing: ${top -- mh}")
   }
-
-  test("round-8 facade methods agree with their oracle-checked entries") {
-    import org.apache.spark.sql.functions.desc
-    val viaFacade = Graft.pmiPairs(spark, Tables.documents(spark, d))
-      .orderBy(desc("pmi_r6"), col("a"), col("b")).limit(100)
-      .collect().map(_.toSeq).toSeq
-    val viaEntry = SparkEntry.queries("q130_pmi_cooccur")(spark, d)
-      .collect().map(_.toSeq).toSeq
-    assert(viaFacade == viaEntry)
-    val cont = Graft.containmentPairs(spark, docs, minContMilli = 500)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(4))).toSet
-    val contEntry = SparkEntry.queries("q133_containment")(spark, d)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(4))).toSet
-    assert(contEntry.subsetOf(cont), s"missing: ${contEntry -- cont}")
-  }
-
-  test("round-11 inference facade methods agree with their entries") {
-    import org.apache.spark.sql.functions.{col, round => sqlRound}
-    val viaFacade = Graft.kruskalWallis(
-      Tables.orders(spark, d).select(col("o_orderpriority").as("g"),
-        sqlRound(col("o_totalprice") * 100, 0).cast("long").as("v")),
-      "g", "v").collect().map(_.toSeq).toSeq
-    val viaEntry = SparkEntry.queries("q310_kruskal_wallis")(spark, d)
-      .collect().map(_.toSeq).toSeq
-    assert(viaFacade == viaEntry)
-    val wf = Graft.winsorizedSummary(
-      Tables.orders(spark, d)
-        .join(Tables.customer(spark, d), col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment").as("seg"),
-          sqlRound(col("o_totalprice") * 100, 0).cast("long").as("v")),
-      "seg", "v").collect().map(_.toSeq).toSeq
-    val we = SparkEntry.queries("q313_winsorized")(spark, d)
-      .collect().map(_.toSeq).toSeq
-    assert(wf == we)
-    val lf = Graft.linkPredictionScores(spark, {
-      val s = spark
-      import s.implicits._
-      Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
-    }).collect().map(_.toSeq).toSeq
-    assert(lf.size == 1 && lf.head(3) == 500000L)
-  }
-
-  test("round-11 continuation facade methods agree with their entries") {
-    import org.apache.spark.sql.functions.{col, round => sqlRound}
-    val s = spark
-    import s.implicits._
-    // acf + ljung-box over the q319/q320 global daily revenue series
-    val daily = Tables.events(spark, d)
-      .groupBy(to_date(date_trunc("DAY", col("ts"))).as("day"))
-      .agg(sum(sqlRound(col("value") * 100, 0).cast("long")).as("cents"))
-      .select(unix_date(col("day")).cast("long").as("t"), col("cents"))
-    val af = Graft.acfExact(daily, "t", "cents", 10).collect().map(_.toSeq).toSeq
-    val ae = SparkEntry.queries("q319_acf")(spark, d).collect().map(_.toSeq).toSeq
-    assert(af == ae)
-    val jf = Graft.ljungBox(daily, "t", "cents", 10).collect().map(_.toSeq).toSeq
-    val je = SparkEntry.queries("q320_ljung_box")(spark, d).collect().map(_.toSeq).toSeq
-    assert(jf == je)
-    // nelson-aalen on the q317 retention fixture
-    val lastP = max(when(col("event_type") === "purchase", col("ts")))
-    val units = Tables.events(spark, d).groupBy(col("user_id"))
-      .agg(datediff(to_date(lastP), to_date(min(col("ts")))).cast("long").as("t"),
-        when(lastP <= lit("2024-01-24").cast("timestamp"), 1L)
-          .otherwise(0L).as("e"))
-      .filter(col("t").isNotNull)
-    val nf = Graft.nelsonAalen(units).collect().map(_.toSeq).toSeq
-    val ne = SparkEntry.queries("q317_nelson_aalen")(spark, d)
-      .collect().map(_.toSeq).toSeq
-    assert(nf == ne)
-    // hits on the analytic co-endorsement star: 1->2, 3->2 — node 2 is
-    // the sole authority, 1 and 3 tie as hubs at full scale
-    val hg = Graft.hitsFixedPoint(spark, Seq((1L, 2L), (3L, 2L)).toDF("u", "v"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(hg(2L) == ((0L, graft.graph.Hits.Scale)))
-    assert(hg(1L) == ((graft.graph.Hits.Scale, 0L)) && hg(1L) == hg(3L))
-    // shapley with one channel: phi = the exposed conversion rate
-    val ev = Seq((1L, "a"), (1L, "buy"), (2L, "a"))
-      .toDF("user_id", "event_type")
-    val sh = Graft.shapleyAttribution(ev, Seq("a"), "buy").collect()
-    assert(sh.length == 1 && sh.head.getString(0) == "a"
-      && sh.head.getLong(1) == 500000L && sh.head.getDouble(2) == 0.5)
-    // markov removal effects agree with the q321 entry
-    val mf = Graft.markovRemovalEffects(Tables.events(spark, d),
-      Seq("view", "click", "signup", "error"), "purchase")
-      .collect().map(_.toSeq).toSeq
-    val me = SparkEntry.queries("q321_markov_attribution")(spark, d)
-      .collect().map(_.toSeq).toSeq
-    assert(mf == me)
-    // decontamination audit agrees with the q322 entry
-    val allDocs = Tables.documents(spark, d)
-      .select(col("doc_id").as("id"), col("text"))
-    val cf = Graft.contaminationAudit(spark,
-        allDocs.filter(col("id") % 13 =!= 0),
-        allDocs.filter(col("id") % 13 === 0), n = 4)
-      .collect().map(_.toSeq).toSeq
-    val ce = SparkEntry.queries("q322_decontamination")(spark, d)
-      .collect().map(_.toSeq).toSeq
-    assert(cf == ce)
-    // bradley-terry on an analytic shutout
-    val bt = Graft.bradleyTerry(
-      Seq(("m1", "m2"), ("m1", "m2")).toDF("w", "l")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(bt == Seq(("m1", 1000000L), ("m2", 0L)))
-    // neighborhood function rungs on the analytic path graph
-    val pg = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
-    val nx = Graft.neighborhoodFunctionExact(spark, pg, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).toSeq
-    assert(nx == Seq((0L, 3L), (1L, 7L), (2L, 9L)))
-    val nh = Graft.neighborhoodFunctionHll(spark, pg, 2).collect()
-    assert(nh.length == 3 && nh.last.getLong(2) == 1000L)
-    // isotonic on the canonical violation
-    val iso = Graft.isotonicFit(Seq((1L, 1L), (2L, 0L), (3L, 1L))
-      .toDF("bin", "y")).collect().map(_.getDouble(4)).toSeq
-    assert(iso == Seq(0.5, 0.5, 1.0))
-    // theil-sen agrees with the q327 entry on the fixture series
-    val daily2 = Tables.events(spark, d)
-      .groupBy(to_date(date_trunc("DAY", col("ts"))).as("day"))
-      .agg(sum(sqlRound(col("value") * 100, 0).cast("long")).as("cents"))
-      .select(unix_date(col("day")).cast("long").as("t"), col("cents"))
-    val tsf = Graft.theilSen(daily2, "t", "cents").collect().map(_.toSeq).toSeq
-    val tse = SparkEntry.queries("q327_theil_sen")(spark, d)
-      .collect().map(_.toSeq).toSeq
-    assert(tsf == tse)
-    // stratified ate on the simpson fixture: naive 72, adjusted 0
-    val simpson = (Seq((1L, 10L, 0L)) ++ Seq.fill(9)((0L, 10L, 0L)) ++
-      Seq.fill(9)((1L, 100L, 1L)) ++ Seq((0L, 100L, 1L)))
-      .toDF("treat", "y", "s")
-    val sa = Graft.stratifiedAte(simpson).collect().head
-    assert(sa.getDouble(4) == 72.0 && sa.getDouble(5) == 0.0)
-  }
 }

@@ -295,4 +295,56 @@ class PackSpec extends SparkSpec {
     assert(got == Map("srcA" -> ((3L, 500L)), "srcB" -> ((1L, 500L))), got)
     assert(got.values.forall(_._2 < 1000L), "one-shard discrepancy bound")
   }
+
+  private def tarCorpus = {
+    val s = spark
+    import s.implicits._
+    (0L until 9L).map(i => (i, s"doc $i words here", s"src${i % 2}"))
+      .toDF("doc_id", "text", "source")
+  }
+
+  test("writeTarShards: the manifest counts every doc and wds-shards reads the corpus back") {
+    val s = spark
+    val dir = java.nio.file.Files.createTempDirectory("packtar").toString
+    val manifest = Pack.writeTarShards(s, tarCorpus, dir, shards = 3).collect()
+    assert(manifest.map(_.getLong(1)).sum == 9L)
+    val back = s.read.format("wds-shards").load(dir)
+      .select(col("key").cast("long").as("doc_id"),
+        col("payload").cast("string").as("text"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(back == (0L until 9L).map(i => i -> s"doc $i words here").toMap)
+  }
+
+  test("writeMultimodalTarShards + pairMultimodalSamples close the loop on disk") {
+    val s = spark
+    val dir = java.nio.file.Files.createTempDirectory("packmm").toString
+    val manifest = Pack.writeMultimodalTarShards(s, tarCorpus, dir, shards = 3)
+      .collect()
+    assert(manifest.map(_.getLong(2)).sum == 18L) // 9 docs x 2 members
+    val pairs = Pack.pairMultimodalSamples(s, dir).collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getBoolean(2))).toMap
+    assert(pairs == (0L until 9L).map(i =>
+      i -> ((s"doc $i words here", true))).toMap)
+  }
+
+  test("pairMultimodalSamples dies loud on a sample missing a modality") {
+    val s = spark
+    val dir = java.nio.file.Files.createTempDirectory("packmmbad").toString
+    // one complete pair + one orphan caption
+    val members = Seq(
+      ("0.jpg", graft.io.Jpeg.buildGray(
+        graft.io.Bmp.Gray(16, 16, Array.fill(256)(7)),
+        graft.io.Jpeg.DcExactQuant)),
+      ("0.txt", "cap".getBytes("UTF-8")),
+      ("1.txt", "orphan".getBytes("UTF-8")))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, graft.io.Tar.shardFileNameOf(0)),
+      graft.io.Tar.build(members))
+    val e = intercept[org.apache.spark.SparkException] {
+      Pack.pairMultimodalSamples(s, dir).collect()
+    }
+    def msg(t: Throwable): String =
+      t.getMessage + Option(t.getCause).map(msg).getOrElse("")
+    assert(msg(e).contains("must carry exactly jpg+txt"))
+  }
 }

@@ -59,4 +59,19 @@ class RefieldSpec extends SparkSpec {
       displacement = true)
     assert(delta.ds.collect().length == 8)
   }
+
+  test("a changed index outside the affine grid fails loud, naming the index and the grid") {
+    val s = spark
+    val aff = mkAffines(None)
+    // (3,0,0) used to recompute its 4 in-bounds neighbors, (9,9,9) to
+    // return an empty grid
+    Seq(BlockIndex(3, 0, 0), BlockIndex(9, 9, 9), BlockIndex(0, -1, 0)).foreach { bi =>
+      val e = intercept[IllegalArgumentException] {
+        LocalAffine.refieldBlocks(s, shape, spacing, aff, bs, o,
+          Seq(BlockIndex(1, 1, 1), bi), displacement = true)
+      }
+      assert(e.getMessage.contains(s"(${bi.bx},${bi.by},${bi.bz})") &&
+        e.getMessage.contains("3x3x3"), e.getMessage)
+    }
+  }
 }

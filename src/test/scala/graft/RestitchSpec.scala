@@ -54,4 +54,19 @@ class RestitchSpec extends SparkSpec {
       assert(java.util.Arrays.equals(b.data, full((b.bi.bx, b.bi.by, b.bi.bz))))
     }
   }
+
+  test("a changed index outside the grid fails loud, naming the index and the grid") {
+    val s = spark
+    val grid = BlockGrid.fromTiles(s, mkTiles(3), Array(6, 6, 6), Array(2, 2, 2),
+      Array(4, 4, 4), 1)
+    // (4,0,0) used to recompute its 4 in-bounds neighbors, (9,9,9) to
+    // return an empty grid
+    Seq(BlockIndex(4, 0, 0), BlockIndex(9, 9, 9), BlockIndex(-1, 0, 0)).foreach { bi =>
+      val e = intercept[IllegalArgumentException] {
+        Stitch.restitchBlocks(grid, Seq(BlockIndex(1, 1, 1), bi))
+      }
+      assert(e.getMessage.contains(s"(${bi.bx},${bi.by},${bi.bz})") &&
+        e.getMessage.contains("4x4x4"), e.getMessage)
+    }
+  }
 }

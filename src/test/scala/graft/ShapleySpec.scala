@@ -80,4 +80,11 @@ class ShapleySpec extends SparkSpec {
         Seq("a", "purchase"), "purchase")
     }
   }
+
+  test("one channel: phi is the exposed conversion rate, phi_r6 in rate units") {
+    val got = Shapley.shapleyAttribution(
+      ev(Seq((1L, "a"), (1L, "buy"), (2L, "a"))), Seq("a"), "buy").collect()
+    assert(got.length == 1 && got.head.getString(0) == "a"
+      && got.head.getLong(1) == 500000L && got.head.getDouble(2) == 0.5)
+  }
 }

@@ -32,8 +32,5 @@ class SourceLmMatrixSpec extends SparkSpec {
         assert(got((a, a)) < got((a, b)), s"H($a,$a) !< H($a,$b)")
       }
     }
-    // facade delegation
-    assert(Graft.sourceLmMatrix(s, docs).collect().map(_.toSeq).toSeq ==
-      graft.llm.Curation.sourceLmMatrix(s, docs).collect().map(_.toSeq).toSeq)
   }
 }

@@ -395,4 +395,20 @@ class WdsSourceSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, "_SUCCESS"), Array.empty[Byte])
     assert(spark.read.format("wds-shards").load(dir).count() == 8)
   }
+
+  test("DSv2 sink: append then overwrite of a repartitioned corpus reads it back") {
+    val dir = java.nio.file.Files.createTempDirectory("wdssink").toString + "/out"
+    val members = corpus(9).select(col("doc_id").cast("string").as("key"),
+      lit("txt").as("ext"), col("text").cast("binary").as("payload"))
+    members.repartition(3, col("key"))
+      .write.format("wds-shards").mode("append").save(dir)
+    // overwrite replaces the set
+    members.repartition(2, col("key"))
+      .write.format("wds-shards").mode("overwrite").save(dir)
+    val back = spark.read.format("wds-shards").load(dir)
+      .select(col("key").cast("long"), col("payload").cast("string"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(back == (0 until 9).map(i => i.toLong -> s"doc $i body ${"x" * (i % 7)}").toMap)
+    assert(new java.io.File(dir).listFiles().length <= 2)
+  }
 }
