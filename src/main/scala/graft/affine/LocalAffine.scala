@@ -1,6 +1,6 @@
 package graft.affine
 
-import org.apache.spark.sql.{Encoder, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
 import graft.core.{Block, BlockGrid, BlockIndex, GridMeta}
 import graft.ndarray.Nd
 
@@ -44,6 +44,7 @@ final case class BlockAffine(bx: Int, by: Int, bz: Int, rows: Int, cols: Int, m:
   */
 object LocalAffine {
   private implicit val blockEnc: Encoder[Block] = BlockGrid.blockEncoder
+  private val blockIndexEnc: Encoder[BlockIndex] = Encoders.product[BlockIndex]
 
   /** The merge_neighbors kernel (local_affine.py:33-107) for one block:
     * generates this block's world-space coordinate sub-grid on the fly and
@@ -99,6 +100,9 @@ object LocalAffine {
       }
     }
 
+    // Loop invariants are hoisted out of the voxel loop, and every value
+    // keeps the per-voxel evaluation order ((a·px + b·py) + c·pz) + t, so
+    // the output is bit-identical to the unhoisted form (AffineBitsSpec).
     var nox = -1
     while (nox <= 1) {
       var noy = -1
@@ -109,35 +113,51 @@ object LocalAffine {
           if (ix >= 0 && iy >= 0 && iz >= 0 &&
               ix < grid(0) && iy < grid(1) && iz < grid(2)) {
             val (m, mOff) = affAt(ix, iy, iz)
+            // affine_to_field (local_affine.py:16-30): rows [:3],
+            // translation = last column; double math like einsum
+            val r1 = mOff + cols; val r2 = mOff + 2 * cols
+            val a00 = m(mOff); val a01 = m(mOff + 1); val a02 = m(mOff + 2); val a03 = m(r1 - 1)
+            val a10 = m(r1); val a11 = m(r1 + 1); val a12 = m(r1 + 2); val a13 = m(r2 - 1)
+            val a20 = m(r2); val a21 = m(r2 + 1); val a22 = m(r2 + 2); val a23 = m(r2 + cols - 1)
             val (x0, wsx) = axisSlices(0, nox)
             val (y0, wsy) = axisSlices(1, noy)
             val (z0, wsz) = axisSlices(2, noz)
             val wxp = prof(0); val wyp = prof(1); val wzp = prof(2)
+            // the z row, shared by every (i, j) of this neighbour
+            val nk = wsz.length
+            val pz = new Array[Double](nk); val wz = new Array[Float](nk)
+            val pz0 = new Array[Double](nk); val pz1 = new Array[Double](nk)
+            val pz2 = new Array[Double](nk)
+            var k = 0
+            while (k < nk) {
+              pz(k) = ((start(2) + z0 + k).toFloat * spacing(2)).toDouble
+              wz(k) = wzp(wsz(k))
+              pz0(k) = a02 * pz(k); pz1(k) = a12 * pz(k); pz2(k) = a22 * pz(k)
+              k += 1
+            }
             var i = 0
             while (i < wsx.length) {
-              val gxv = (start(0) + x0 + i).toFloat * spacing(0)
-              val px = gxv.toDouble
+              val px = ((start(0) + x0 + i).toFloat * spacing(0)).toDouble
               val wxv = wxp(wsx(i))
               var j = 0
               while (j < wsy.length) {
-                val gyv = (start(1) + y0 + j).toFloat * spacing(1)
-                val py = gyv.toDouble
+                val py = ((start(1) + y0 + j).toFloat * spacing(1)).toDouble
                 val wxy = wxv * wyp(wsy(j))
-                var k = 0
-                while (k < wsz.length) {
-                  val gzv = (start(2) + z0 + k).toFloat * spacing(2)
-                  val pz = gzv.toDouble
-                  val w = wxy * wzp(wsz(k))
-                  // affine_to_field (local_affine.py:16-30): rows [:3],
-                  // translation = last column; double math like einsum
-                  var rx = m(mOff) * px + m(mOff + 1) * py + m(mOff + 2) * pz + m(mOff + cols - 1)
-                  var ry = m(mOff + cols) * px + m(mOff + cols + 1) * py + m(mOff + cols + 2) * pz + m(mOff + 2 * cols - 1)
-                  var rz = m(mOff + 2 * cols) * px + m(mOff + 2 * cols + 1) * py + m(mOff + 2 * cols + 2) * pz + m(mOff + 3 * cols - 1)
-                  if (displacement) { rx -= px; ry -= py; rz -= pz }
-                  val di = ((((x0 + i) * ny) + (y0 + j)) * nz + (z0 + k)) * 3
+                val s0 = a00 * px + a01 * py
+                val s1 = a10 * px + a11 * py
+                val s2 = a20 * px + a21 * py
+                var di = ((((x0 + i) * ny) + (y0 + j)) * nz + z0) * 3
+                k = 0
+                while (k < nk) {
+                  val w = wxy * wz(k)
+                  var rx = s0 + pz0(k) + a03
+                  var ry = s1 + pz1(k) + a13
+                  var rz = s2 + pz2(k) + a23
+                  if (displacement) { rx -= px; ry -= py; rz -= pz(k) }
                   out(di) += (rx * w).toFloat
                   out(di + 1) += (ry * w).toFloat
                   out(di + 2) += (rz * w).toFloat
+                  di += 3
                   k += 1
                 }
                 j += 1
@@ -187,7 +207,7 @@ object LocalAffine {
       // (An AffineGrid that exists in driver memory is by definition still
       // parallelizable; the true at-scale entry point is the Dataset
       // overload below, fed from storage.)
-      implicit val affEnc: Encoder[BlockAffine] = org.apache.spark.sql.Encoders.product[BlockAffine]
+      implicit val affEnc: Encoder[BlockAffine] = Encoders.product[BlockAffine]
       val rows4 = affines.rows; val cols4 = affines.cols
       val affDs = spark.createDataset(
         (for {
@@ -207,19 +227,18 @@ object LocalAffine {
     val sh = shape.clone()
 
     import spark.implicits._
+    // one typed op from range id to cropped block: each op of a typed
+    // chain costs the driver its own analysis on every pass
     val ds = spark.range(0, nBlocks, 1, math.min(nBlocks, spark.sparkContext.defaultParallelism * 2).toInt)
       .as[Long]
-      .map { i => BlockIndex.fromLinear(i, g) }(org.apache.spark.sql.Encoders.product[BlockIndex])
-      // keep only blocks intersecting the requested shape (crop,
-      // local_affine.py:136 — padded domain minus out-of-range blocks)
-      .filter { bi: BlockIndex =>
-        bi.bx.toLong * bs(0) < sh(0) && bi.by.toLong * bs(1) < sh(1) && bi.bz.toLong * bs(2) < sh(2)
-      }
-      .map { bi =>
-        val full = mergeNeighbors(bi, bs, g, sp, bAff.value, ov, displacement)
-        Block(bi, bs(0), bs(1), bs(2), 3, full)
+      .flatMap { i =>
+        val bi = BlockIndex.fromLinear(i, g)
+        // keep only blocks intersecting the requested shape (crop,
+        // local_affine.py:136 — padded domain minus out-of-range blocks)
+        if (bi.bx.toLong * bs(0) < sh(0) && bi.by.toLong * bs(1) < sh(1) && bi.bz.toLong * bs(2) < sh(2))
+          Some(fieldBlock(bi, bs, g, sp, bAff.value, ov, sh, displacement))
+        else None
       }(blockEnc)
-      .map(cropBlock(_, bs, sh))(blockEnc)
     BlockGrid(meta, ds)
   }
 
@@ -263,17 +282,10 @@ object LocalAffine {
       } yield BlockIndex(x, y, z)
     }.distinct.sortBy(bi => (bi.bx, bi.by, bi.bz))
     val bAff = spark.sparkContext.broadcast(affines)
-    import spark.implicits._
-    implicit val biEnc: Encoder[BlockIndex] =
-      org.apache.spark.sql.Encoders.product[BlockIndex]
-    val ds = spark.createDataset(affected)
+    val ds = spark.createDataset(affected)(blockIndexEnc)
       .repartition(math.min(affected.size,
         spark.sparkContext.defaultParallelism).max(1))
-      .map { bi =>
-        val full = mergeNeighbors(bi, bs, g, sp, bAff.value, ov, displacement)
-        Block(bi, bs(0), bs(1), bs(2), 3, full)
-      }(blockEnc)
-      .map(cropBlock(_, bs, sh))(blockEnc)
+      .map(fieldBlock(_, bs, g, sp, bAff.value, ov, sh, displacement))(blockEnc)
     BlockGrid(meta, ds)
   }
 
@@ -302,12 +314,9 @@ object LocalAffine {
     val g = grid.clone()
     val sh = shape.clone()
     implicit val pieceEnc: Encoder[(Int, Int, Int, BlockAffine)] =
-      org.apache.spark.sql.Encoders.product[(Int, Int, Int, BlockAffine)]
+      Encoders.product[(Int, Int, Int, BlockAffine)]
     implicit val keyEnc: Encoder[(Int, Int, Int)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaInt,
-        org.apache.spark.sql.Encoders.scalaInt,
-        org.apache.spark.sql.Encoders.scalaInt)
+      Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt, Encoders.scalaInt)
     val pieces = affines.flatMap { a =>
       val src = BlockIndex(a.bx, a.by, a.bz)
       val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, BlockAffine)]
@@ -401,6 +410,16 @@ object LocalAffine {
           math.max(0, 2 * overlap(ax) - 1) <= bs(ax) + 1,
         s"invalid overlap ${overlap(ax)} for blocksize ${bs(ax)} on axis $ax")
     }
+
+  /** One field block: the kernel over the full block, cropped to `sh` —
+    * the per-block body of [[localAffinesToField]] and [[refieldBlocks]].
+    */
+  private def fieldBlock(
+      bi: BlockIndex, bs: Array[Int], g: Array[Int], sp: Array[Float],
+      affines: AffineGrid, ov: Array[Int], sh: Array[Long], displacement: Boolean): Block = {
+    val full = mergeNeighbors(bi, bs, g, sp, affines, ov, displacement)
+    cropBlock(Block(bi, bs(0), bs(1), bs(2), 3, full), bs, sh)
+  }
 
   /** Trim a full-size block to the cropped output shape. */
   private def cropBlock(b: Block, bs: Array[Int], sh: Array[Long]): Block = {

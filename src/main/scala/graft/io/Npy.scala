@@ -29,7 +29,7 @@ object Npy {
     while (i < total) { bb.put(' '.toByte); i += 1 }
     bb.position(total - 1)
     bb.put('\n'.toByte)
-    data.foreach(bb.putFloat)
+    bb.asFloatBuffer().put(data)
     bb.array()
   }
 

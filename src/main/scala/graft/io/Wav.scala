@@ -59,7 +59,7 @@ object Wav {
       .putShort(align.toShort) // block align
       .putShort(16) // bits per sample
     bb.put("data".getBytes("US-ASCII")).putInt(n)
-    data.foreach(bb.putShort)
+    bb.asShortBuffer().put(data)
     bb.array()
   }
 

@@ -75,12 +75,18 @@ object Nd {
       var y = 0
       while (y < ny) {
         val fxy = fx * wy(y)
-        var z = 0
-        while (z < nz) {
-          val f = fxy * wz(z)
-          var k = 0
-          while (k < c) { data(i) = data(i) * f; i += 1; k += 1 }
-          z += 1
+        if (c == 1) { // stride-1 row the JIT vectorizes; same products
+          var z = 0
+          while (z < nz) { data(i + z) = data(i + z) * (fxy * wz(z)); z += 1 }
+          i += nz
+        } else {
+          var z = 0
+          while (z < nz) {
+            val f = fxy * wz(z)
+            var k = 0
+            while (k < c) { data(i) = data(i) * f; i += 1; k += 1 }
+            z += 1
+          }
         }
         y += 1
       }
@@ -129,12 +135,18 @@ object Nd {
       while (y < dy) {
         val fxy = fx * wy(y0 + y)
         var si = (((x0 + x) * ny + (y0 + y)) * nz + z0) * c
-        var z = 0
-        while (z < dz) {
-          val f = fxy * wz(z0 + z)
-          var k = 0
-          while (k < c) { out(oi) = src(si) * f; oi += 1; si += 1; k += 1 }
-          z += 1
+        if (c == 1) { // stride-1 row the JIT vectorizes; same products
+          var z = 0
+          while (z < dz) { out(oi + z) = src(si + z) * (fxy * wz(z0 + z)); z += 1 }
+          oi += dz
+        } else {
+          var z = 0
+          while (z < dz) {
+            val f = fxy * wz(z0 + z)
+            var k = 0
+            while (k < c) { out(oi) = src(si) * f; oi += 1; si += 1; k += 1 }
+            z += 1
+          }
         }
         y += 1
       }

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 import graft.core.{Block, BlockGrid, BlockIndex}
 import graft.io.{BlockIO, Npy}
@@ -25,6 +26,27 @@ class NpySpec extends SparkSpec {
     val (shape, back) = Npy.fromBytes(bytes)
     assert(shape.toSeq == Seq(2, 3, 4))
     assert(back.toSeq == data.toSeq)
+  }
+
+  test("npy payload bytes equal a per-element putFloat encoding, raw bits kept") {
+    val bits = Seq(
+      0x7fc00000, 0x7fc00001, 0x7f800001, 0xffc12345, 0xff800123, // NaN payloads, both signs
+      0x80000000, 0x00000000, // -0.0, +0.0
+      0x00000001, 0x007fffff, 0x80000001, 0x807fffff, // subnormals
+      0x7f800000, 0xff800000, // ±Inf
+      0x3f800000, 0xc0490fdb) // ordinary values
+    val rnd = new scala.util.Random(5)
+    val data = (bits ++ Seq.fill(4096 - bits.size)(rnd.nextInt()))
+      .map(java.lang.Float.intBitsToFloat).toArray
+    val bytes = Npy.toBytes(Array(16, 256), data)
+    val want = ByteBuffer.allocate(data.length * 4).order(ByteOrder.LITTLE_ENDIAN)
+    data.foreach(want.putFloat)
+    val header = bytes.length - data.length * 4
+    assert(header % 64 == 0)
+    assert(java.util.Arrays.equals(bytes.drop(header), want.array()))
+    val (_, back) = Npy.fromBytes(bytes)
+    assert(back.map(java.lang.Float.floatToRawIntBits).toSeq ==
+      data.map(java.lang.Float.floatToRawIntBits).toSeq)
   }
 
   test("block grid round-trips through per-block npy export/import") {

@@ -84,4 +84,15 @@ class WavSpec extends AnyFunSuite {
     ByteBuffer.wrap(overrun).order(ByteOrder.LITTLE_ENDIAN).putInt(40, 9999)
     intercept[IllegalArgumentException](Wav.parse(overrun))
   }
+
+  test("build16 payload bytes equal a per-sample putShort encoding") {
+    val rnd = new scala.util.Random(7)
+    val data = Array[Short](Short.MinValue, Short.MaxValue, -1, 0, 1, 0x1234, -0x1234) ++
+      Array.fill(4093)(rnd.nextInt().toShort)
+    val bytes = Wav.build16(44100, 1, data)
+    val want = ByteBuffer.allocate(data.length * 2).order(ByteOrder.LITTLE_ENDIAN)
+    data.foreach(want.putShort)
+    assert(bytes.length == 44 + data.length * 2)
+    assert(java.util.Arrays.equals(bytes.drop(44), want.array()))
+  }
 }
