@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{call_function, col, lit}
 import graft.ndarray.Nd
 
 /** One halo fragment of the generic overlap exchange: source chunk data
@@ -67,9 +68,11 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
     * the new chunk with `newMeta`'s declared geometry.
     *
     * Physical plan: ONE shuffle — a ≤27-way piece flatMap keyed by target
-    * block, groupByKey hash-partitioned on the uniform BlockIndex (no
-    * skew), assemble + kernel in mapGroups. Pieces of a target are
-    * disjoint, so assembly is a copy and the result is deterministic
+    * block, routed to contiguous runs of the row-major block order
+    * ([[BlockGrid.routeToTargets]]; a hash of the key put 5/12/2/8 of a
+    * 3³ grid's blocks on 4 partitions), sorted on the target within each
+    * partition, assemble + kernel once per target run. Pieces of a target
+    * are disjoint, so assembly is a copy and the result is deterministic
     * independent of arrival order. At 100 TB shuffle volume is the array
     * volume + the halo fraction; no second exchange.
     *
@@ -97,8 +100,6 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
     }
     val periodic = boundary == Boundary.Periodic
     implicit val pieceEnc: Encoder[OverlapPiece] = Encoders.product[OverlapPiece]
-    implicit val keyEnc: Encoder[(Int, Int, Int)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt, Encoders.scalaInt)
     implicit val blockEnc: Encoder[Block] = BlockGrid.blockEncoder
     val pieces = ds.flatMap { b =>
       require(b.nx == cs(0) && b.ny == cs(1) && b.nz == cs(2),
@@ -162,9 +163,8 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
       out.toSeq
     }
     val noPad = boundary == Boundary.NoPad
-    val merged = pieces
-      .groupByKey(p => (p.tx, p.ty, p.tz))
-      .mapGroups { (key, it) =>
+    val merged = BlockGrid.routeToTargets(pieces, BlockGrid.linearTarget(g), m.numBlocks)
+      .mapPartitions(BlockGrid.mapRuns(_)((p: OverlapPiece) => (p.tx, p.ty, p.tz)) { (key, it) =>
         val bi = BlockIndex(key._1, key._2, key._3)
         // NoPad: a domain-edge side contributes no margin, so the
         // extended tile shrinks there; pieces were routed in the
@@ -189,7 +189,7 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
           case _ => ()
         }
         kernel(Block(bi, ex, ey, ez, c, buf))
-      }
+      })
     BlockGrid(newMeta, merged)
   }
 
@@ -298,8 +298,6 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
       if (p >= 0) p else -p - 2
     }
     implicit val pieceEnc: Encoder[OverlapPiece] = Encoders.product[OverlapPiece]
-    implicit val keyEnc: Encoder[(Int, Int, Int)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt, Encoders.scalaInt)
     implicit val blockEnc: Encoder[Block] = BlockGrid.blockEncoder
     val pieces = ds.flatMap { b =>
       val srcLo = Array(sb(0)(b.bi.bx), sb(1)(b.bi.by), sb(2)(b.bi.bz))
@@ -340,9 +338,9 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
       }
       out.toSeq
     }
-    val merged = pieces
-      .groupByKey(p => (p.tx, p.ty, p.tz))
-      .mapGroups { (key, it) =>
+    val merged = BlockGrid.routeToTargets(pieces, BlockGrid.linearTarget(newMeta.blockGrid),
+        newMeta.numBlocks)
+      .mapPartitions(BlockGrid.mapRuns(_)((p: OverlapPiece) => (p.tx, p.ty, p.tz)) { (key, it) =>
         val ex = (tb(0)(key._1 + 1) - tb(0)(key._1)).toInt
         val ey = (tb(1)(key._2 + 1) - tb(1)(key._2)).toInt
         val ez = (tb(2)(key._3 + 1) - tb(2)(key._3)).toInt
@@ -351,7 +349,7 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
           Nd.placeInto(buf, ex, ey, ez, c, p.data, p.x0, p.y0, p.z0, p.dx, p.dy, p.dz)
         }
         Block(BlockIndex(key._1, key._2, key._3), ex, ey, ez, c, buf)
-      }
+      })
     BlockGrid(newMeta, merged)
   }
 
@@ -471,6 +469,52 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
 
 object BlockGrid {
   implicit val blockEncoder: Encoder[Block] = Encoders.product[Block]
+
+  /** The row-major linear index ([[BlockIndex.linear]]) of a piece's
+    * target block `(tx, ty, tz)` on `grid`, as a column.
+    */
+  private[graft] def linearTarget(grid: Array[Int]): Column =
+    (col("tx").cast("long") * grid(1) + col("ty")) * grid(2) + col("tz")
+
+  /** The one exchange of a halo or rechunk op: sends each piece to
+    * partition `rank * P div targets`, where `rank` in [0, targets) orders
+    * the target blocks and P = min(targets, spark.sql.shuffle.partitions),
+    * so each partition receives one contiguous run of ⌈targets/P⌉ or
+    * ⌊targets/P⌋ targets (a hash of the target put 5/12/2/8 of a 3³ grid's
+    * blocks on 4 partitions). Within a partition the pieces are sorted on
+    * the target `(tx, ty, tz)`, then on `tieBreak`, so each target's
+    * pieces arrive as one run ([[mapRuns]]); the sort spills to disk
+    * under memory pressure, so no partition must fit in memory.
+    */
+  private[graft] def routeToTargets[T](pieces: Dataset[T], rank: Column, targets: Long,
+      tieBreak: Column*): Dataset[T] = {
+    val shufflePartitions = pieces.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong
+    val p = math.max(1L, math.min(targets, shufflePartitions))
+    pieces
+      .repartitionById(p.toInt, call_function("div", rank.cast("long") * p, lit(targets)).cast("int"))
+      .sortWithinPartitions(Seq(col("tx"), col("ty"), col("tz")) ++ tieBreak: _*)
+  }
+
+  /** One `f(key, run)` per run of equal `key` in a key-sorted iterator.
+    * `run` reads the underlying iterator lazily and only within its run;
+    * whatever `f` leaves unread is skipped.
+    */
+  private[graft] def mapRuns[T, K, R](it: Iterator[T])(key: T => K)(f: (K, Iterator[T]) => R): Iterator[R] = {
+    val in = it.buffered
+    new Iterator[R] {
+      def hasNext: Boolean = in.hasNext
+      def next(): R = {
+        val k = key(in.head)
+        val run = new Iterator[T] {
+          def hasNext: Boolean = in.hasNext && key(in.head) == k
+          def next(): T = if (hasNext) in.next() else Iterator.empty.next()
+        }
+        val r = f(k, run)
+        while (run.hasNext) run.next()
+        r
+      }
+    }
+  }
 
   /** Build a grid from an in-memory dense array of extended tiles (tests,
     * small inputs). `tiles` maps BlockIndex -> flat row-major chunk of

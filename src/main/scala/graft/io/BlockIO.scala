@@ -3,6 +3,7 @@ package graft.io
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 import graft.core.{Block, BlockGrid, GridMeta}
 
 /** Parquet source/sink for block grids — the engine's storage edge
@@ -80,19 +81,16 @@ object BlockIO {
     * (nx,ny,nz) or (nx,ny,nz,c)) + the meta sidecar — numpy-ecosystem
     * interop (the reference's consumers read numpy). Files are written
     * ON the executors through the Hadoop FS of `dir`'s scheme; the
-    * driver ships its Hadoop conf entries so credentials/settings apply.
+    * driver broadcasts its Hadoop conf once so credentials/settings apply.
     */
   def exportNpy(grid: BlockGrid, dir: String): Unit = {
     val spark = grid.ds.sparkSession
-    import scala.jdk.CollectionConverters._
-    val confEntries = spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
+    val sc = spark.sparkContext
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
     grid.ds.foreachPartition { (it: Iterator[Block]) =>
       if (it.hasNext) {
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confEntries.foreach { case (k, v) => conf.set(k, v) }
         val base = new org.apache.hadoop.fs.Path(dir)
-        val fs = base.getFileSystem(conf)
+        val fs = base.getFileSystem(conf.value.value)
         it.foreach { b =>
           val shape = if (b.c == 1) Array(b.nx, b.ny, b.nz) else Array(b.nx, b.ny, b.nz, b.c)
           val p = new org.apache.hadoop.fs.Path(base,

@@ -2,20 +2,24 @@ package graft.sources
 
 import java.util
 import java.util.concurrent.atomic.AtomicLong
-import scala.jdk.CollectionConverters._
+import scala.collection.mutable.ArrayBuffer
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.SparkContext
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.io.Npy
 
@@ -41,9 +45,13 @@ import graft.io.Npy
   *     index columns never opens the files at all (the name carries
   *     them); `nx/ny/nz/c` without `data` parses the ~128-byte npy
   *     header only. NpySourceSpec pins both with a decode counter.
-  *   - One [[InputPartition]] per file: block payloads are the natural
-  *     work unit (as everywhere in the engine), and Spark schedules
-  *     them with locality from the scan, no driver materialization.
+  *   - **Spark-sized scan partitions**: the pruned files, in block-index
+  *     order, are packed into contiguous block ranges by the rule Spark's
+  *     file sources use (`spark.sql.files.maxPartitionBytes`,
+  *     `openCostInBytes`, `minPartitionNum`): 27 tiles of 4 MB make 4
+  *     tasks of 7/7/7/6 files at a parallelism of 4, not 27 tasks whose
+  *     fixed cost outweighs their work. A task reads its files one at a
+  *     time, each decoded only when a non-index column is asked for.
   */
 class NpyDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "npy-blocks"
@@ -166,13 +174,19 @@ class NpyScanBuilder(path: String) extends ScanBuilder
   override def build(): Scan = NpyScan(path, required, pushed)
 }
 
-case class NpyFilePartition(file: String, bx: Int, by: Int, bz: Int)
-  extends InputPartition
+/** One block file of a scan: its path, length and block index. */
+case class NpyBlockFile(file: String, length: Long, bx: Int, by: Int, bz: Int)
+
+/** The files one task reads: a contiguous range of the block order. */
+case class NpyFilePartition(files: Array[NpyBlockFile]) extends InputPartition
 
 case class NpyScan(path: String, required: StructType, pushed: Array[Filter])
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  // rows only: planning need not build the reader factory (and broadcast
+  // the Hadoop conf) just to ask each partition whether it reads columnar
+  override def columnarSupportMode(): Scan.ColumnarSupportMode = Scan.ColumnarSupportMode.UNSUPPORTED
   override def description(): String =
     s"npy-blocks $path, pushed=[${pushed.mkString(", ")}], read=${required.fieldNames.mkString(",")}"
 
@@ -180,70 +194,99 @@ case class NpyScan(path: String, required: StructType, pushed: Array[Filter])
     val p = new Path(path)
     val conf = SparkContext.getOrCreate().hadoopConfiguration
     val fs = p.getFileSystem(conf)
-    fs.listStatus(p).iterator
+    val files = fs.listStatus(p).iterator
       .filter(_.isFile)
       .flatMap { st =>
         NpyDataSource.parseIndex(st.getPath.getName)
-          .map(bi => (st.getPath.toString, bi))
+          .map { case (bx, by, bz) => NpyBlockFile(st.getPath.toString, st.getLen, bx, by, bz) }
       }
-      .filter { case (_, bi) => pushed.forall(NpyDataSource.eval(_, bi)) }
-      .map { case (f, (bx, by, bz)) => NpyFilePartition(f, bx, by, bz): InputPartition }
+      .filter(f => pushed.forall(NpyDataSource.eval(_, (f.bx, f.by, f.bz))))
       .toArray
+      .sortBy(f => (f.bx, f.by, f.bz))
+    NpyScan.pack(files, SparkSession.active).map(NpyFilePartition(_): InputPartition)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // ship the driver's Hadoop conf entries so scheme credentials and
-    // settings apply on executors (Configuration isn't serializable)
-    val confEntries = SparkContext.getOrCreate().hadoopConfiguration
-      .iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
-    NpyReaderFactory(required, confEntries)
+    // ship the driver's Hadoop conf once per scan so scheme credentials
+    // and settings apply on executors, as Spark's file sources do
+    val sc = SparkContext.getOrCreate()
+    NpyReaderFactory(required, sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)))
+  }
+}
+
+object NpyScan {
+  /** Spark's file-source packing (`FilePartition.getFilePartitions`),
+    * order kept: a file joins the current partition unless that would
+    * take it past the split size; each file costs its length plus
+    * `openCostInBytes`. The split size is Spark's own
+    * (`FilePartition.maxSplitBytes`): the total cost over
+    * `minPartitionNum` (default parallelism), at least one open cost, at
+    * most `maxPartitionBytes`.
+    */
+  private[graft] def pack(files: Array[NpyBlockFile],
+      spark: SparkSession): Array[Array[NpyBlockFile]] = {
+    val openCost = SQLConf.get.filesOpenCostInBytes
+    val split = FilePartition.maxSplitBytes(spark, files.map(_.length + openCost).sum)
+    val parts = ArrayBuffer.empty[Array[NpyBlockFile]]
+    val current = ArrayBuffer.empty[NpyBlockFile]
+    var size = 0L
+    files.foreach { f =>
+      if (current.nonEmpty && size + f.length > split) {
+        parts += current.toArray; current.clear(); size = 0L
+      }
+      current += f
+      size += f.length + openCost
+    }
+    if (current.nonEmpty) parts += current.toArray
+    parts.toArray
   }
 }
 
 case class NpyReaderFactory(required: StructType,
-    confEntries: Array[(String, String)]) extends PartitionReaderFactory {
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = partition.asInstanceOf[NpyFilePartition]
+    val files = partition.asInstanceOf[NpyFilePartition].files
     new PartitionReader[InternalRow] {
-      private var emitted = false
+      private var i = -1
+      private var decoded: (Array[Int], Array[Float]) = null
 
       // decode lazily and at the cheapest sufficient level: index-only
       // projections never open the file; shape-only projections could
       // read just the npy header, but the payload decode is one pass
       // over bytes already fetched, so we decode once when any non-index
       // column is required
-      private lazy val decoded: (Array[Int], Array[Float]) = {
-        NpyDataSource.decodes.incrementAndGet()
-        val conf = new Configuration(false)
-        confEntries.foreach { case (k, v) => conf.set(k, v) }
-        val p = new Path(part.file)
-        val fs = p.getFileSystem(conf)
-        val in = fs.open(p)
-        val bytes =
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            val chunk = new Array[Byte](64 * 1024)
-            var n = in.read(chunk)
-            while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-            buf.toByteArray
-          } finally in.close()
-        Npy.fromBytes(bytes)
+      private def decode(): (Array[Int], Array[Float]) = {
+        if (decoded == null) {
+          NpyDataSource.decodes.incrementAndGet()
+          val f = files(i)
+          val p = new Path(f.file)
+          val in = p.getFileSystem(conf.value.value).open(p)
+          val bytes = new Array[Byte](Math.toIntExact(f.length))
+          try in.readFully(bytes)
+          finally in.close()
+          decoded = Npy.fromBytes(bytes)
+        }
+        decoded
       }
 
-      override def next(): Boolean =
-        if (emitted) false else { emitted = true; true }
+      override def next(): Boolean = {
+        i += 1
+        decoded = null
+        i < files.length
+      }
 
       override def get(): InternalRow = {
-        val vals = required.fields.map { f =>
-          f.name match {
-            case "bx" => part.bx
-            case "by" => part.by
-            case "bz" => part.bz
-            case "nx" => decoded._1(0)
-            case "ny" => decoded._1(1)
-            case "nz" => decoded._1(2)
-            case "c" => if (decoded._1.length == 4) decoded._1(3) else 1
-            case "data" => UnsafeArrayData.fromPrimitiveArray(decoded._2)
+        val f = files(i)
+        val vals = required.fields.map { col =>
+          col.name match {
+            case "bx" => f.bx
+            case "by" => f.by
+            case "bz" => f.bz
+            case "nx" => decode()._1(0)
+            case "ny" => decode()._1(1)
+            case "nz" => decode()._1(2)
+            case "c" => if (decode()._1.length == 4) decode()._1(3) else 1
+            case "data" => UnsafeArrayData.fromPrimitiveArray(decode()._2)
             case other => sys.error(s"unknown column $other")
           }
         }

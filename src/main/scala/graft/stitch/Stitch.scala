@@ -1,14 +1,15 @@
 package graft.stitch
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.functions.{col, udf}
 import graft.core.{Block, BlockGrid, BlockIndex, GridMeta}
 import graft.ndarray.Nd
 
 /** One halo fragment in flight: source tile data destined for target block
   * (tx,ty,tz), to be added at offset (x0,y0,z0) with extent (dx,dy,dz).
-  * `srcKey` is the source block's linear index — groups sort on it before
-  * summing so float32 accumulation order is deterministic run-to-run
-  * (SURVEY.md §7.5).
+  * `srcKey` is the source block's linear index — a target's pieces are
+  * summed in its order so float32 accumulation order is deterministic
+  * run-to-run (SURVEY.md §7.5).
   */
 final case class HaloPiece(
     tx: Int, ty: Int, tz: Int,
@@ -29,17 +30,19 @@ final case class HaloPiece(
   * `blocksize` (stitch.py:120).
   *
   * Physical plan: one narrow `map` (weighting, codegen-fused) + ONE
-  * shuffle: a 27-way `flatMap` keyed by target block, `groupByKey`,
-  * `mapGroups` assemble-and-sum. Shuffle volume = output volume + the
-  * halo fraction — never a second exchange. At 100 TB this is the only
-  * all-to-all and it hash-partitions uniformly on BlockIndex (uniform
-  * block sizes → no skew; AQE has nothing to fix).
+  * shuffle: a 27-way `flatMap` keyed by target block, routed to
+  * contiguous runs of the row-major block order
+  * ([[BlockGrid.routeToTargets]]), sorted on (target, srcKey) within each
+  * partition, one assemble-and-sum per target run. Shuffle volume =
+  * output volume + the halo fraction — never a second exchange. At 100 TB
+  * this is the only all-to-all. Every partition gets ⌈n/P⌉ or ⌊n/P⌋ of
+  * the n target blocks: hashing the block key, as a `groupByKey` does,
+  * put 5/12/2/8 of a 3³ grid's blocks on 4 partitions, so one core merged
+  * and wrote 12 blocks while the others idled.
   */
 object Stitch {
   private implicit val blockEnc: Encoder[Block] = BlockGrid.blockEncoder
   private implicit val pieceEnc: Encoder[HaloPiece] = Encoders.product[HaloPiece]
-  private implicit val keyEnc: Encoder[(Int, Int, Int)] =
-    Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt, Encoders.scalaInt)
 
   /** Apply the per-tile separable blend weights (stitch.py:7-46). Pure
     * per-row kernel; no data movement.
@@ -164,22 +167,29 @@ object Stitch {
     requireStitchable(meta)
     val outMeta = meta.copy(overlap = Array(0, 0, 0))
 
-    val merged = emitPieces(grid)
-      .groupByKey(p => (p.tx, p.ty, p.tz))
-      .mapGroups { (key, it) =>
-        // deterministic float32 accumulation: srcKey-sorted (assembleBlock)
-        assembleBlock(key._1, key._2, key._3, it.toSeq, meta)
-      }
-
+    val merged = merge(emitPieces(grid), BlockGrid.linearTarget(meta.blockGrid),
+      meta.numBlocks, meta)
     BlockGrid(outMeta, merged)
   }
+
+  /** The merge shared by [[stitchBlocks]] and [[restitchBlocks]]: route
+    * the pieces by target `rank` (in [0, targets)), then assemble each
+    * target's srcKey-sorted run — the deterministic float32 accumulation
+    * order of [[assembleBlock]].
+    */
+  private def merge(pieces: Dataset[HaloPiece], rank: Column, targets: Long,
+      meta: GridMeta): Dataset[Block] =
+    BlockGrid.routeToTargets(pieces, rank, targets, col("srcKey"))
+      .mapPartitions(BlockGrid.mapRuns(_)((p: HaloPiece) => (p.tx, p.ty, p.tz)) { (key, run) =>
+        assembleBlock(key._1, key._2, key._3, run.toSeq, meta)
+      })
 
   /** INCREMENTAL RE-STITCH — a tile was re-acquired/replaced: only the
     * output blocks whose 26-neighborhood touches a changed tile can
     * differ, so recompute exactly those. `affected` = changed tiles +
     * their neighbors; the pieces feeding an affected target come from
     * affected + THEIR neighbors (2 hops from the change), so the input
-    * is filtered to that set and the normal one-shuffle stitch runs on
+    * is filtered to that set and the stitch's one-shuffle merge runs on
     * it, restricted to affected targets. Accumulation per target sees
     * the identical piece set in the identical srcKey order, so every
     * returned block is BIT-IDENTICAL to a full re-stitch
@@ -215,15 +225,15 @@ object Stitch {
     val sources = neighborhood(affected)
     val spark = grid.ds.sparkSession
     val srcB = spark.sparkContext.broadcast(sources)
-    val affB = spark.sparkContext.broadcast(affected)
+    // a target's rank in the sorted affected set routes it: ranking over
+    // the whole grid would put a clustered neighbourhood on one partition
+    val rankB = spark.sparkContext.broadcast(affected.toSeq.sorted.zipWithIndex.toMap)
     val sub = grid.ds.filter(b => srcB.value.contains((b.bi.bx, b.bi.by, b.bi.bz)))
     val outMeta = meta.copy(overlap = Array(0, 0, 0))
-    val merged = emitPieces(BlockGrid(meta, sub))
-      .filter(p => affB.value.contains((p.tx, p.ty, p.tz)))
-      .groupByKey(p => (p.tx, p.ty, p.tz))
-      .mapGroups { (key, it) =>
-        assembleBlock(key._1, key._2, key._3, it.toSeq, meta)
-      }
+    val pieces = emitPieces(BlockGrid(meta, sub))
+      .filter(p => rankB.value.contains((p.tx, p.ty, p.tz)))
+    val rank = udf((x: Int, y: Int, z: Int) => rankB.value((x, y, z)))
+    val merged = merge(pieces, rank(col("tx"), col("ty"), col("tz")), affected.size, meta)
     BlockGrid(outMeta, merged)
   }
 
