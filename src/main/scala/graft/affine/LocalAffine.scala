@@ -1,7 +1,7 @@
 package graft.affine
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import graft.core.{Block, BlockGrid, BlockIndex, GridMeta}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import graft.core.{Block, BlockGrid, BlockIndex, GridMeta, Routed}
 import graft.ndarray.Nd
 
 /** A small dense grid of per-block affine matrices — the side input of
@@ -21,6 +21,13 @@ final case class AffineGrid(gx: Int, gy: Int, gz: Int, rows: Int, cols: Int, m: 
   * from a driver-held AffineGrid).
   */
 final case class BlockAffine(bx: Int, by: Int, bz: Int, rows: Int, cols: Int, m: Array[Double])
+
+/** One affine on its way to a neighbouring field block (tx,ty,tz) in the
+  * join path's exchange; `srcKey` is the linear index of the affine's own
+  * block.
+  */
+private[graft] final case class AffineNeighbor(
+    tx: Int, ty: Int, tz: Int, srcKey: Long, cols: Int, m: Array[Double]) extends Routed
 
 /** Dense blended deformation-field synthesis from a grid of local affines —
   * the Spark-native re-expression of local_affine.py:110-139.
@@ -103,73 +110,59 @@ object LocalAffine {
     // Loop invariants are hoisted out of the voxel loop, and every value
     // keeps the per-voxel evaluation order ((a·px + b·py) + c·pz) + t, so
     // the output is bit-identical to the unhoisted form (AffineBitsSpec).
-    var nox = -1
-    while (nox <= 1) {
-      var noy = -1
-      while (noy <= 1) {
-        var noz = -1
-        while (noz <= 1) {
-          val ix = bi.bx + nox; val iy = bi.by + noy; val iz = bi.bz + noz
-          if (ix >= 0 && iy >= 0 && iz >= 0 &&
-              ix < grid(0) && iy < grid(1) && iz < grid(2)) {
-            val (m, mOff) = affAt(ix, iy, iz)
-            // affine_to_field (local_affine.py:16-30): rows [:3],
-            // translation = last column; double math like einsum
-            val r1 = mOff + cols; val r2 = mOff + 2 * cols
-            val a00 = m(mOff); val a01 = m(mOff + 1); val a02 = m(mOff + 2); val a03 = m(r1 - 1)
-            val a10 = m(r1); val a11 = m(r1 + 1); val a12 = m(r1 + 2); val a13 = m(r2 - 1)
-            val a20 = m(r2); val a21 = m(r2 + 1); val a22 = m(r2 + 2); val a23 = m(r2 + cols - 1)
-            val (x0, wsx) = axisSlices(0, nox)
-            val (y0, wsy) = axisSlices(1, noy)
-            val (z0, wsz) = axisSlices(2, noz)
-            val wxp = prof(0); val wyp = prof(1); val wzp = prof(2)
-            // the z row, shared by every (i, j) of this neighbour
-            val nk = wsz.length
-            val pz = new Array[Double](nk); val wz = new Array[Float](nk)
-            val pz0 = new Array[Double](nk); val pz1 = new Array[Double](nk)
-            val pz2 = new Array[Double](nk)
-            var k = 0
-            while (k < nk) {
-              pz(k) = ((start(2) + z0 + k).toFloat * spacing(2)).toDouble
-              wz(k) = wzp(wsz(k))
-              pz0(k) = a02 * pz(k); pz1(k) = a12 * pz(k); pz2(k) = a22 * pz(k)
-              k += 1
-            }
-            var i = 0
-            while (i < wsx.length) {
-              val px = ((start(0) + x0 + i).toFloat * spacing(0)).toDouble
-              val wxv = wxp(wsx(i))
-              var j = 0
-              while (j < wsy.length) {
-                val py = ((start(1) + y0 + j).toFloat * spacing(1)).toDouble
-                val wxy = wxv * wyp(wsy(j))
-                val s0 = a00 * px + a01 * py
-                val s1 = a10 * px + a11 * py
-                val s2 = a20 * px + a21 * py
-                var di = ((((x0 + i) * ny) + (y0 + j)) * nz + z0) * 3
-                k = 0
-                while (k < nk) {
-                  val w = wxy * wz(k)
-                  var rx = s0 + pz0(k) + a03
-                  var ry = s1 + pz1(k) + a13
-                  var rz = s2 + pz2(k) + a23
-                  if (displacement) { rx -= px; ry -= py; rz -= pz(k) }
-                  out(di) += (rx * w).toFloat
-                  out(di + 1) += (ry * w).toFloat
-                  out(di + 2) += (rz * w).toFloat
-                  di += 3
-                  k += 1
-                }
-                j += 1
-              }
-              i += 1
-            }
-          }
-          noz += 1
-        }
-        noy += 1
+    bi.neighbors(grid).foreach { case (nb, (nox, noy, noz)) =>
+      val (m, mOff) = affAt(nb.bx, nb.by, nb.bz)
+      // affine_to_field (local_affine.py:16-30): rows [:3],
+      // translation = last column; double math like einsum
+      val r1 = mOff + cols; val r2 = mOff + 2 * cols
+      val a00 = m(mOff); val a01 = m(mOff + 1); val a02 = m(mOff + 2); val a03 = m(r1 - 1)
+      val a10 = m(r1); val a11 = m(r1 + 1); val a12 = m(r1 + 2); val a13 = m(r2 - 1)
+      val a20 = m(r2); val a21 = m(r2 + 1); val a22 = m(r2 + 2); val a23 = m(r2 + cols - 1)
+      val (x0, wsx) = axisSlices(0, nox)
+      val (y0, wsy) = axisSlices(1, noy)
+      val (z0, wsz) = axisSlices(2, noz)
+      val wxp = prof(0); val wyp = prof(1); val wzp = prof(2)
+      // the z row, shared by every (i, j) of this neighbour
+      val nk = wsz.length
+      val pz = new Array[Double](nk); val wz = new Array[Float](nk)
+      val pz0 = new Array[Double](nk); val pz1 = new Array[Double](nk)
+      val pz2 = new Array[Double](nk)
+      var k = 0
+      while (k < nk) {
+        pz(k) = ((start(2) + z0 + k).toFloat * spacing(2)).toDouble
+        wz(k) = wzp(wsz(k))
+        pz0(k) = a02 * pz(k); pz1(k) = a12 * pz(k); pz2(k) = a22 * pz(k)
+        k += 1
       }
-      nox += 1
+      var i = 0
+      while (i < wsx.length) {
+        val px = ((start(0) + x0 + i).toFloat * spacing(0)).toDouble
+        val wxv = wxp(wsx(i))
+        var j = 0
+        while (j < wsy.length) {
+          val py = ((start(1) + y0 + j).toFloat * spacing(1)).toDouble
+          val wxy = wxv * wyp(wsy(j))
+          val s0 = a00 * px + a01 * py
+          val s1 = a10 * px + a11 * py
+          val s2 = a20 * px + a21 * py
+          var di = ((((x0 + i) * ny) + (y0 + j)) * nz + z0) * 3
+          k = 0
+          while (k < nk) {
+            val w = wxy * wz(k)
+            var rx = s0 + pz0(k) + a03
+            var ry = s1 + pz1(k) + a13
+            var rz = s2 + pz2(k) + a23
+            if (displacement) { rx -= px; ry -= py; rz -= pz(k) }
+            out(di) += (rx * w).toFloat
+            out(di + 1) += (ry * w).toFloat
+            out(di + 2) += (rz * w).toFloat
+            di += 3
+            k += 1
+          }
+          j += 1
+        }
+        i += 1
+      }
     }
     out
   }
@@ -184,7 +177,7 @@ object LocalAffine {
   /** Top-level field synthesis (local_affine.py:110-139): generated grid ->
     * broadcast affines -> per-block kernel -> crop to `shape`. Zero
     * shuffles; one broadcast; blocks generated from `spark.range`. Beyond
-    * `maxBroadcastBlocks` affines, dispatches to the join path
+    * [[BroadcastMaxBlocks]] affines, dispatches to the join path
     * ([[localAffinesToFieldJoin]]) instead of broadcasting — both paths
     * produce bit-identical output (AffineJoinPathSpec).
     */
@@ -195,31 +188,16 @@ object LocalAffine {
       affines: AffineGrid,
       blocksize: Array[Int],
       overlap: Array[Int],
-      displacement: Boolean = true,
-      maxBroadcastBlocks: Long = BroadcastMaxBlocks): BlockGrid = {
+      displacement: Boolean = true): BlockGrid = {
     val grid = affines.gridDims
     val bs = blocksize.clone()
     requireValidOverlap(bs, overlap)
     val meta = GridMeta(shape.clone(), bs, Array(0, 0, 0), grid.clone(), components = 3)
     val nBlocks = meta.numBlocks
-    if (nBlocks > maxBroadcastBlocks) {
-      // too big to broadcast: ship the affines as a Dataset and join.
-      // (An AffineGrid that exists in driver memory is by definition still
-      // parallelizable; the true at-scale entry point is the Dataset
-      // overload below, fed from storage.)
-      implicit val affEnc: Encoder[BlockAffine] = Encoders.product[BlockAffine]
-      val rows4 = affines.rows; val cols4 = affines.cols
-      val affDs = spark.createDataset(
-        (for {
-          x <- 0 until grid(0); y <- 0 until grid(1); z <- 0 until grid(2)
-        } yield {
-          val off = affines.matOffset(x, y, z)
-          BlockAffine(x, y, z, rows4, cols4,
-            java.util.Arrays.copyOfRange(affines.m, off, off + rows4 * cols4))
-        }).toSeq)
-      return localAffinesToFieldJoin(
-        spark, shape, spacing, affDs, grid, blocksize, overlap, displacement)
-    }
+    // too big to broadcast: ship the affines as a Dataset and join (the
+    // at-scale entry point is the join itself, fed from storage)
+    if (nBlocks > BroadcastMaxBlocks) return localAffinesToFieldJoin(
+      spark, shape, spacing, affineRows(spark, affines), grid, blocksize, overlap, displacement)
     val bAff = spark.sparkContext.broadcast(affines)
     val sp = spacing.clone()
     val ov = overlap.clone()
@@ -235,7 +213,7 @@ object LocalAffine {
         val bi = BlockIndex.fromLinear(i, g)
         // keep only blocks intersecting the requested shape (crop,
         // local_affine.py:136 — padded domain minus out-of-range blocks)
-        if (bi.bx.toLong * bs(0) < sh(0) && bi.by.toLong * bs(1) < sh(1) && bi.bz.toLong * bs(2) < sh(2))
+        if (inShape(bi, bs, sh))
           Some(fieldBlock(bi, bs, g, sp, bAff.value, ov, sh, displacement))
         else None
       }(blockEnc)
@@ -271,16 +249,9 @@ object LocalAffine {
     val meta = GridMeta(shape.clone(), bs, Array(0, 0, 0), grid.clone(), components = 3)
     val sh = shape.clone(); val sp = spacing.clone(); val ov = overlap.clone()
     val g = grid.clone()
-    val affected = changed.flatMap { bi =>
-      for {
-        dx <- -1 to 1; dy <- -1 to 1; dz <- -1 to 1
-        x = bi.bx + dx; y = bi.by + dy; z = bi.bz + dz
-        if x >= 0 && y >= 0 && z >= 0 && x < g(0) && y < g(1) && z < g(2)
-        // the crop filter of the full path
-        if x.toLong * bs(0) < sh(0) && y.toLong * bs(1) < sh(1) &&
-          z.toLong * bs(2) < sh(2)
-      } yield BlockIndex(x, y, z)
-    }.distinct.sortBy(bi => (bi.bx, bi.by, bi.bz))
+    // the changed affines' neighbours, less those the crop drops
+    val affected = changed.flatMap(_.neighbors(g).map(_._1)).distinct
+      .filter(bi => inShape(bi, bs, sh)).sortBy(_.linear(g))
     val bAff = spark.sparkContext.broadcast(affines)
     val ds = spark.createDataset(affected)(blockIndexEnc)
       .repartition(math.min(affected.size,
@@ -291,17 +262,18 @@ object LocalAffine {
 
   /** Join-path field synthesis for affine grids too large to broadcast:
     * each affine row is flatMapped to its ≤27 neighbor target blocks,
-    * grouped by target (ONE shuffle, hash-partitioned on the uniform
-    * BlockIndex — the stitch plan's shape), and the same kernel runs over
-    * the assembled neighborhood. Shuffle volume = 27×(affine rows) ≈
-    * 3.5 KB/block — negligible next to the emitted field. Accumulation
-    * order is identical to the broadcast path, so output is bit-identical.
+    * and the one exchange ([[BlockGrid.exchange]]) routes them to
+    * contiguous runs of the row-major block order, where the same kernel
+    * runs over each target's assembled neighborhood. Shuffle volume =
+    * 27×(affine rows) ≈ 3.5 KB/block — negligible next to the emitted
+    * field. Accumulation order is identical to the broadcast path, so
+    * output is bit-identical.
     */
   def localAffinesToFieldJoin(
       spark: SparkSession,
       shape: Array[Long],
       spacing: Array[Float],
-      affines: org.apache.spark.sql.Dataset[BlockAffine],
+      affines: Dataset[BlockAffine],
       grid: Array[Int],
       blocksize: Array[Int],
       overlap: Array[Int],
@@ -313,45 +285,33 @@ object LocalAffine {
     val ov = overlap.clone()
     val g = grid.clone()
     val sh = shape.clone()
-    implicit val pieceEnc: Encoder[(Int, Int, Int, BlockAffine)] =
-      Encoders.product[(Int, Int, Int, BlockAffine)]
-    implicit val keyEnc: Encoder[(Int, Int, Int)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt, Encoders.scalaInt)
-    val pieces = affines.flatMap { a =>
+    implicit val rowEnc: Encoder[AffineNeighbor] = Encoders.product[AffineNeighbor]
+    val rows = affines.flatMap { a =>
       val src = BlockIndex(a.bx, a.by, a.bz)
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, BlockAffine)]
-      var dx = -1
-      while (dx <= 1) {
-        var dy = -1
-        while (dy <= 1) {
-          var dz = -1
-          while (dz <= 1) {
-            val t = src + ((dx, dy, dz))
-            // target must be in-grid AND intersect the cropped shape
-            if (t.inGrid(g) &&
-                t.bx.toLong * bs(0) < sh(0) && t.by.toLong * bs(1) < sh(1) &&
-                t.bz.toLong * bs(2) < sh(2))
-              out += ((t.bx, t.by, t.bz, a))
-            dz += 1
-          }
-          dy += 1
-        }
-        dx += 1
+      // every in-grid neighbour the crop keeps receives this affine
+      src.neighbors(g).collect { case (t, _) if inShape(t, bs, sh) =>
+        AffineNeighbor(t.bx, t.by, t.bz, src.linear(g), a.cols, a.m)
       }
-      out.toSeq
     }
-    val ds = pieces
-      .groupByKey(p => (p._1, p._2, p._3))
-      .mapGroups { (key, it) =>
-        val bi = BlockIndex(key._1, key._2, key._3)
-        val nbrs = it.map(p => ((p._4.bx, p._4.by, p._4.bz), p._4)).toMap
-        var cols = 4
-        nbrs.headOption.foreach(h => cols = h._2.cols)
-        val affAt = (x: Int, y: Int, z: Int) => { val a = nbrs((x, y, z)); (a.m, 0) }
-        val full = mergeNeighborsLookup(bi, bs, g, sp, affAt, cols, ov, displacement)
-        cropBlock(Block(bi, bs(0), bs(1), bs(2), 3, full), bs, sh)
-      }
+    val ds = BlockGrid.exchange(rows, BlockGrid.linearTarget(g), meta.numBlocks) { (bi, run) =>
+      val nbrs = run.map(a => a.srcKey -> a).toMap
+      val affAt = (x: Int, y: Int, z: Int) => (nbrs(BlockIndex(x, y, z).linear(g)).m, 0)
+      val full = mergeNeighborsLookup(bi, bs, g, sp, affAt, nbrs.head._2.cols, ov, displacement)
+      cropBlock(Block(bi, bs(0), bs(1), bs(2), 3, full), bs, sh)
+    }
     BlockGrid(meta, ds)
+  }
+
+  /** The affines of `affines` as one row per block — the join path's input. */
+  private[graft] def affineRows(spark: SparkSession, affines: AffineGrid): Dataset[BlockAffine] = {
+    val n = affines.rows * affines.cols
+    spark.createDataset(for {
+      x <- 0 until affines.gx; y <- 0 until affines.gy; z <- 0 until affines.gz
+    } yield {
+      val off = affines.matOffset(x, y, z)
+      BlockAffine(x, y, z, affines.rows, affines.cols,
+        java.util.Arrays.copyOfRange(affines.m, off, off + n))
+    })(Encoders.product[BlockAffine])
   }
 
   /** Voxel coordinate grid — reference parity with `position_grid`
@@ -420,6 +380,10 @@ object LocalAffine {
     val full = mergeNeighbors(bi, bs, g, sp, affines, ov, displacement)
     cropBlock(Block(bi, bs(0), bs(1), bs(2), 3, full), bs, sh)
   }
+
+  /** Whether block `bi` starts inside the cropped output shape `sh`. */
+  private def inShape(bi: BlockIndex, bs: Array[Int], sh: Array[Long]): Boolean =
+    bi.bx.toLong * bs(0) < sh(0) && bi.by.toLong * bs(1) < sh(1) && bi.bz.toLong * bs(2) < sh(2)
 
   /** Trim a full-size block to the cropped output shape. */
   private def cropBlock(b: Block, bs: Array[Int], sh: Array[Long]): Block = {

@@ -4,8 +4,9 @@ package graft.core
   *
   * Mirrors the reference's `block_info[0]['chunk-location']`
   * (/root/reference/dask_stitch/stitch.py:13, local_affine.py:46) as a
-  * first-class key: the halo shuffle hashes on it and all neighbor
-  * arithmetic happens on it.
+  * first-class key: every block-grid exchange routes on its
+  * [[linear]] index ([[BlockGrid.exchange]]) and all neighbor
+  * arithmetic happens on it ([[neighbors]]).
   */
 final case class BlockIndex(bx: Int, by: Int, bz: Int) {
   def apply(ax: Int): Int = ax match {
@@ -19,9 +20,20 @@ final case class BlockIndex(bx: Int, by: Int, bz: Int) {
   /** Row-major linearization (x-major like numpy C order). */
   def linear(grid: Array[Int]): Long =
     (bx.toLong * grid(1) + by) * grid(2) + bz
+  /** The in-grid ±1 neighbours of this block, itself included, each with
+    * its offset, in lexicographic (dx, dy, dz) order — the reference's
+    * `itertools.product` order (local_affine.py:79), which is also
+    * ascending [[linear]] order.
+    */
+  def neighbors(grid: Array[Int]): Seq[(BlockIndex, (Int, Int, Int))] =
+    BlockIndex.offsets.map(d => (this + d, d)).filter(_._1.inGrid(grid))
 }
 
 object BlockIndex {
+  /** The 27 offsets of a ±1 neighbourhood in lexicographic (dx, dy, dz) order. */
+  val offsets: Seq[(Int, Int, Int)] =
+    for (dx <- -1 to 1; dy <- -1 to 1; dz <- -1 to 1) yield (dx, dy, dz)
+
   def fromLinear(i: Long, grid: Array[Int]): BlockIndex = {
     val z = (i % grid(2)).toInt
     val y = ((i / grid(2)) % grid(1)).toInt

@@ -4,17 +4,35 @@ import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{call_function, col, lit}
 import graft.ndarray.Nd
 
-/** One halo fragment of the generic overlap exchange: source chunk data
-  * destined for target block (tx,ty,tz)'s extended buffer at offset
-  * (x0,y0,z0), extent (dx,dy,dz). Pieces of one target are DISJOINT
-  * (every concatenated-space coordinate belongs to exactly one source
-  * chunk), so assembly is order-independent copy, not accumulation.
+/** A row of a block-grid exchange ([[BlockGrid.exchange]]): bound for
+  * target block (tx,ty,tz), ordered within its target by `srcKey`, the
+  * linear index of the block it came from.
   */
-private[graft] final case class OverlapPiece(
+private[graft] trait Routed {
+  def tx: Int
+  def ty: Int
+  def tz: Int
+  def srcKey: Long
+}
+
+/** One halo fragment in flight: source block data destined for target
+  * block (tx,ty,tz), to be placed at offset (x0,y0,z0) with extent
+  * (dx,dy,dz). `srcKey` is the source block's linear index. The stitch
+  * sums a target's pieces in its order, so float32 accumulation order is
+  * deterministic run-to-run (SURVEY.md §7.5); `mapOverlap` and `rechunk`
+  * pieces of one target are disjoint, so their assembly is a copy.
+  */
+final case class HaloPiece(
     tx: Int, ty: Int, tz: Int,
+    srcKey: Long,
     x0: Int, y0: Int, z0: Int,
     dx: Int, dy: Int, dz: Int,
-    data: Array[Float])
+    data: Array[Float]) extends Routed
+
+object HaloPiece {
+  /** found implicitly wherever pieces are built or read back */
+  implicit val encoder: Encoder[HaloPiece] = Encoders.product[HaloPiece]
+}
 
 /** Domain-edge fill policy of [[BlockGrid.mapOverlap]] — the counterpart
   * of dask's `map_overlap(boundary=...)` options. `Constant` matches
@@ -68,13 +86,11 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
     * the new chunk with `newMeta`'s declared geometry.
     *
     * Physical plan: ONE shuffle — a ≤27-way piece flatMap keyed by target
-    * block, routed to contiguous runs of the row-major block order
-    * ([[BlockGrid.routeToTargets]]; a hash of the key put 5/12/2/8 of a
-    * 3³ grid's blocks on 4 partitions), sorted on the target within each
-    * partition, assemble + kernel once per target run. Pieces of a target
-    * are disjoint, so assembly is a copy and the result is deterministic
-    * independent of arrival order. At 100 TB shuffle volume is the array
-    * volume + the halo fraction; no second exchange.
+    * block, then [[BlockGrid.exchange]]: assemble + kernel once per
+    * target run. Pieces of a target are disjoint, so assembly is a copy
+    * and the result is deterministic independent of arrival order. At
+    * 100 TB shuffle volume is the array volume + the halo fraction; no
+    * second exchange.
     *
     * PRECONDITION: the grid must be DENSE — every BlockIndex in
     * [0,blockGrid) must be present exactly once in `ds` (dask arrays are
@@ -99,97 +115,60 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
           s"(got depth=${depth(ax)}, chunk=${cs(ax)} on axis $ax)")
     }
     val periodic = boundary == Boundary.Periodic
-    implicit val pieceEnc: Encoder[OverlapPiece] = Encoders.product[OverlapPiece]
-    implicit val blockEnc: Encoder[Block] = BlockGrid.blockEncoder
     val pieces = ds.flatMap { b =>
       require(b.nx == cs(0) && b.ny == cs(1) && b.nz == cs(2),
         s"mapOverlap requires uniform chunks ${cs.mkString("x")}, " +
           s"got ${b.nx}x${b.ny}x${b.nz} at ${b.bi}")
       val src = b.bi
-      val out = scala.collection.mutable.ArrayBuffer.empty[OverlapPiece]
-      var dx = -1
-      while (dx <= 1) {
-        var dy = -1
-        while (dy <= 1) {
-          var dz = -1
-          while (dz <= 1) {
-            // under Periodic the VIRTUAL (unwrapped) target carries the
-            // intersection arithmetic; the piece routes to the wrapped
-            // real index. Buffer frames are congruent mod the domain, so
-            // virtual-frame offsets are valid in the real buffer.
-            val tgt = src + ((dx, dy, dz))
-            if (periodic || tgt.inGrid(g)) {
-              // intersect source chunk [s*cs, s*cs+cs) with target's
-              // extended domain [t*cs - depth, t*cs + cs + depth) per axis
-              var ok = true
-              val off = new Array[Int](3) // offset within extended buffer
-              val sOff = new Array[Int](3) // offset within source chunk
-              val ext = new Array[Int](3)
-              var ax = 0
-              while (ax < 3 && ok) {
-                val sLo = src(ax).toLong * cs(ax)
-                val sHi = sLo + cs(ax)
-                val tLo = tgt(ax).toLong * cs(ax) - depth(ax)
-                val tHi = tgt(ax).toLong * cs(ax) + cs(ax) + depth(ax)
-                val lo = math.max(sLo, tLo); val hi = math.min(sHi, tHi)
-                if (hi <= lo) ok = false
-                else {
-                  off(ax) = (lo - tLo).toInt
-                  sOff(ax) = (lo - sLo).toInt
-                  ext(ax) = (hi - lo).toInt
-                }
-                ax += 1
-              }
-              if (ok) {
-                val patch =
-                  if (ext(0) == b.nx && ext(1) == b.ny && ext(2) == b.nz) b.data
-                  else Nd.sliceCopy(b.data, b.nx, b.ny, b.nz, c,
-                    sOff(0), sOff(1), sOff(2), ext(0), ext(1), ext(2))
-                val real =
-                  if (periodic)
-                    BlockIndex(Math.floorMod(tgt.bx, g(0)),
-                      Math.floorMod(tgt.by, g(1)), Math.floorMod(tgt.bz, g(2)))
-                  else tgt
-                out += OverlapPiece(real.bx, real.by, real.bz,
-                  off(0), off(1), off(2), ext(0), ext(1), ext(2), patch)
-              }
-            }
-            dz += 1
-          }
-          dy += 1
+      // under Periodic the VIRTUAL (unwrapped) target carries the
+      // intersection arithmetic; the piece routes to the wrapped real
+      // index. Buffer frames are congruent mod the domain, so
+      // virtual-frame offsets are valid in the real buffer.
+      val targets =
+        if (periodic) BlockIndex.offsets.map(src + _) else src.neighbors(g).map(_._1)
+      targets.flatMap { tgt =>
+        // intersect source chunk [s*cs, s*cs+cs) with target's extended
+        // domain [t*cs - depth, t*cs + cs + depth) per axis
+        def axis(ax: Int) = BlockGrid.intersect(
+          src(ax).toLong * cs(ax), src(ax).toLong * cs(ax) + cs(ax),
+          tgt(ax).toLong * cs(ax) - depth(ax), tgt(ax).toLong * cs(ax) + cs(ax) + depth(ax))
+        for ((ox, sx, ex) <- axis(0); (oy, sy, ey) <- axis(1); (oz, sz, ez) <- axis(2)) yield {
+          val real =
+            if (periodic)
+              BlockIndex(Math.floorMod(tgt.bx, g(0)),
+                Math.floorMod(tgt.by, g(1)), Math.floorMod(tgt.bz, g(2)))
+            else tgt
+          HaloPiece(real.bx, real.by, real.bz, src.linear(g),
+            ox, oy, oz, ex, ey, ez, BlockGrid.sliceOf(b, sx, sy, sz, ex, ey, ez))
         }
-        dx += 1
       }
-      out.toSeq
     }
     val noPad = boundary == Boundary.NoPad
-    val merged = BlockGrid.routeToTargets(pieces, BlockGrid.linearTarget(g), m.numBlocks)
-      .mapPartitions(BlockGrid.mapRuns(_)((p: OverlapPiece) => (p.tx, p.ty, p.tz)) { (key, it) =>
-        val bi = BlockIndex(key._1, key._2, key._3)
-        // NoPad: a domain-edge side contributes no margin, so the
-        // extended tile shrinks there; pieces were routed in the
-        // full-margin virtual frame and shift down by the missing margin
-        val lo = Array.tabulate(3)(ax => if (noPad && bi(ax) == 0) 0 else depth(ax))
-        val hi = Array.tabulate(3)(ax => if (noPad && bi(ax) == g(ax) - 1) 0 else depth(ax))
-        val ex = cs(0) + lo(0) + hi(0); val ey = cs(1) + lo(1) + hi(1)
-        val ez = cs(2) + lo(2) + hi(2)
-        val buf = new Array[Float](ex * ey * ez * c)
-        boundary match {
-          case Boundary.Constant(v) if v != 0f => java.util.Arrays.fill(buf, v)
-          case _ => ()
-        }
-        it.foreach { p =>
-          Nd.placeInto(buf, ex, ey, ez, c, p.data,
-            p.x0 - (depth(0) - lo(0)), p.y0 - (depth(1) - lo(1)),
-            p.z0 - (depth(2) - lo(2)), p.dx, p.dy, p.dz)
-        }
-        boundary match {
-          case Boundary.Reflect | Boundary.Nearest =>
-            fillEdges(buf, bi, cs, depth, g, c, boundary == Boundary.Reflect)
-          case _ => ()
-        }
-        kernel(Block(bi, ex, ey, ez, c, buf))
-      })
+    val merged = BlockGrid.exchange(pieces, BlockGrid.linearTarget(g), m.numBlocks) { (bi, run) =>
+      // NoPad: a domain-edge side contributes no margin, so the
+      // extended tile shrinks there; pieces were routed in the
+      // full-margin virtual frame and shift down by the missing margin
+      val lo = Array.tabulate(3)(ax => if (noPad && bi(ax) == 0) 0 else depth(ax))
+      val hi = Array.tabulate(3)(ax => if (noPad && bi(ax) == g(ax) - 1) 0 else depth(ax))
+      val ex = cs(0) + lo(0) + hi(0); val ey = cs(1) + lo(1) + hi(1)
+      val ez = cs(2) + lo(2) + hi(2)
+      val buf = new Array[Float](ex * ey * ez * c)
+      boundary match {
+        case Boundary.Constant(v) if v != 0f => java.util.Arrays.fill(buf, v)
+        case _ => ()
+      }
+      run.foreach { p =>
+        Nd.placeInto(buf, ex, ey, ez, c, p.data,
+          p.x0 - (depth(0) - lo(0)), p.y0 - (depth(1) - lo(1)),
+          p.z0 - (depth(2) - lo(2)), p.dx, p.dy, p.dz)
+      }
+      boundary match {
+        case Boundary.Reflect | Boundary.Nearest =>
+          fillEdges(buf, bi, cs, depth, g, c, boundary == Boundary.Reflect)
+        case _ => ()
+      }
+      kernel(Block(bi, ex, ey, ez, c, buf))
+    }
     BlockGrid(newMeta, merged)
   }
 
@@ -278,11 +257,12 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
   }
 
   /** Shared rechunk engine, boundary-driven so source and target may each
-    * be regular or irregular. ONE shuffle: each source block is sliced
-    * into the target blocks it intersects (pieces are disjoint, assembly
-    * is a copy — deterministic regardless of arrival order). Requires an
-    * exact (overlap-0) source grid; per-axis boundary arrays are tiny
-    * (#chunks-per-axis longs) and ride the task closure.
+    * be regular or irregular. ONE shuffle ([[BlockGrid.exchange]]): each
+    * source block is sliced into the target blocks it intersects (pieces
+    * are disjoint, assembly is a copy — deterministic regardless of
+    * arrival order). Requires an exact (overlap-0) source grid; per-axis
+    * boundary arrays are tiny (#chunks-per-axis longs) and ride the task
+    * closure.
     */
   private def rechunkTo(newMeta: GridMeta): BlockGrid = {
     val m = meta
@@ -297,59 +277,31 @@ final case class BlockGrid(meta: GridMeta, ds: Dataset[Block]) {
       val p = java.util.Arrays.binarySearch(bounds, v)
       if (p >= 0) p else -p - 2
     }
-    implicit val pieceEnc: Encoder[OverlapPiece] = Encoders.product[OverlapPiece]
-    implicit val blockEnc: Encoder[Block] = BlockGrid.blockEncoder
     val pieces = ds.flatMap { b =>
-      val srcLo = Array(sb(0)(b.bi.bx), sb(1)(b.bi.by), sb(2)(b.bi.bz))
-      val srcEx = Array(b.nx, b.ny, b.nz)
-      val out = scala.collection.mutable.ArrayBuffer.empty[OverlapPiece]
+      val src = b.bi
+      val srcLo = Array.tabulate(3)(ax => sb(ax)(src(ax)))
+      val srcHi = Array.tabulate(3)(ax => srcLo(ax) + b.shape(ax))
+      // the target chunks holding this block's first and last voxel
       val tLo = Array.tabulate(3)(ax => locate(tb(ax), srcLo(ax)))
-      val tHi = Array.tabulate(3)(ax => locate(tb(ax), srcLo(ax) + srcEx(ax) - 1))
-      var tx = tLo(0)
-      while (tx <= tHi(0)) {
-        var ty = tLo(1)
-        while (ty <= tHi(1)) {
-          var tz = tLo(2)
-          while (tz <= tHi(2)) {
-            val t = Array(tx, ty, tz)
-            val off = new Array[Int](3); val sOff = new Array[Int](3)
-            val ext = new Array[Int](3)
-            var ax = 0
-            while (ax < 3) {
-              val tStart = tb(ax)(t(ax))
-              val lo = math.max(srcLo(ax), tStart)
-              val hi = math.min(srcLo(ax) + srcEx(ax), tb(ax)(t(ax) + 1))
-              off(ax) = (lo - tStart).toInt
-              sOff(ax) = (lo - srcLo(ax)).toInt
-              ext(ax) = (hi - lo).toInt
-              ax += 1
-            }
-            val patch =
-              if (ext(0) == b.nx && ext(1) == b.ny && ext(2) == b.nz) b.data
-              else Nd.sliceCopy(b.data, b.nx, b.ny, b.nz, c,
-                sOff(0), sOff(1), sOff(2), ext(0), ext(1), ext(2))
-            out += OverlapPiece(tx, ty, tz,
-              off(0), off(1), off(2), ext(0), ext(1), ext(2), patch)
-            tz += 1
-          }
-          ty += 1
-        }
-        tx += 1
-      }
-      out.toSeq
+      val tHi = Array.tabulate(3)(ax => locate(tb(ax), srcHi(ax) - 1))
+      def axis(t: BlockIndex, ax: Int) =
+        BlockGrid.intersect(srcLo(ax), srcHi(ax), tb(ax)(t(ax)), tb(ax)(t(ax) + 1))
+      for {
+        tx <- tLo(0) to tHi(0); ty <- tLo(1) to tHi(1); tz <- tLo(2) to tHi(2)
+        t = BlockIndex(tx, ty, tz)
+        (ox, sx, ex) <- axis(t, 0); (oy, sy, ey) <- axis(t, 1); (oz, sz, ez) <- axis(t, 2)
+      } yield HaloPiece(tx, ty, tz, src.linear(m.blockGrid),
+        ox, oy, oz, ex, ey, ez, BlockGrid.sliceOf(b, sx, sy, sz, ex, ey, ez))
     }
-    val merged = BlockGrid.routeToTargets(pieces, BlockGrid.linearTarget(newMeta.blockGrid),
-        newMeta.numBlocks)
-      .mapPartitions(BlockGrid.mapRuns(_)((p: OverlapPiece) => (p.tx, p.ty, p.tz)) { (key, it) =>
-        val ex = (tb(0)(key._1 + 1) - tb(0)(key._1)).toInt
-        val ey = (tb(1)(key._2 + 1) - tb(1)(key._2)).toInt
-        val ez = (tb(2)(key._3 + 1) - tb(2)(key._3)).toInt
-        val buf = new Array[Float](ex * ey * ez * c)
-        it.foreach { p =>
-          Nd.placeInto(buf, ex, ey, ez, c, p.data, p.x0, p.y0, p.z0, p.dx, p.dy, p.dz)
-        }
-        Block(BlockIndex(key._1, key._2, key._3), ex, ey, ez, c, buf)
-      })
+    val merged = BlockGrid.exchange(pieces, BlockGrid.linearTarget(newMeta.blockGrid),
+        newMeta.numBlocks) { (bi, run) =>
+      val e = Array.tabulate(3)(ax => (tb(ax)(bi(ax) + 1) - tb(ax)(bi(ax))).toInt)
+      val buf = new Array[Float](e(0) * e(1) * e(2) * c)
+      run.foreach { p =>
+        Nd.placeInto(buf, e(0), e(1), e(2), c, p.data, p.x0, p.y0, p.z0, p.dx, p.dy, p.dz)
+      }
+      Block(bi, e(0), e(1), e(2), c, buf)
+    }
     BlockGrid(newMeta, merged)
   }
 
@@ -476,30 +428,53 @@ object BlockGrid {
   private[graft] def linearTarget(grid: Array[Int]): Column =
     (col("tx").cast("long") * grid(1) + col("ty")) * grid(2) + col("tz")
 
-  /** The one exchange of a halo or rechunk op: sends each piece to
-    * partition `rank * P div targets`, where `rank` in [0, targets) orders
-    * the target blocks and P = min(targets, spark.sql.shuffle.partitions),
-    * so each partition receives one contiguous run of ⌈targets/P⌉ or
-    * ⌊targets/P⌋ targets (a hash of the target put 5/12/2/8 of a 3³ grid's
-    * blocks on 4 partitions). Within a partition the pieces are sorted on
-    * the target `(tx, ty, tz)`, then on `tieBreak`, so each target's
-    * pieces arrive as one run ([[mapRuns]]); the sort spills to disk
-    * under memory pressure, so no partition must fit in memory.
+  /** The overlap of source interval [sLo, sHi) with target interval
+    * [tLo, tHi) on one axis: (offset in the target, offset in the
+    * source, extent), or None when they are disjoint.
     */
-  private[graft] def routeToTargets[T](pieces: Dataset[T], rank: Column, targets: Long,
-      tieBreak: Column*): Dataset[T] = {
+  private[graft] def intersect(sLo: Long, sHi: Long, tLo: Long, tHi: Long): Option[(Int, Int, Int)] = {
+    val lo = math.max(sLo, tLo); val hi = math.min(sHi, tHi)
+    if (hi <= lo) None else Some(((lo - tLo).toInt, (lo - sLo).toInt, (hi - lo).toInt))
+  }
+
+  /** The box of `b` at (x0,y0,z0) with extent (dx,dy,dz) — `b`'s own
+    * buffer when the box is the whole block.
+    */
+  private def sliceOf(b: Block, x0: Int, y0: Int, z0: Int, dx: Int, dy: Int, dz: Int): Array[Float] =
+    if (dx == b.nx && dy == b.ny && dz == b.nz) b.data
+    else Nd.sliceCopy(b.data, b.nx, b.ny, b.nz, b.c, x0, y0, z0, dx, dy, dz)
+
+  /** The one exchange of every block-grid op: route each row to its
+    * target block's partition ([[routeToTargets]]), sort each partition
+    * on (tx, ty, tz, srcKey), and `assemble` each target from its run,
+    * which arrives in srcKey order. `run` reads the sorted partition
+    * lazily and only within its target; the sort spills to disk under
+    * memory pressure, so no partition must fit in memory.
+    */
+  private[graft] def exchange[T <: Routed](pieces: Dataset[T], rank: Column, targets: Long)(
+      assemble: (BlockIndex, Iterator[T]) => Block): Dataset[Block] =
+    routeToTargets(pieces, rank, targets)
+      .sortWithinPartitions("tx", "ty", "tz", "srcKey")
+      .mapPartitions(mapRuns(_)((p: T) => BlockIndex(p.tx, p.ty, p.tz))(assemble))
+
+  /** Sends each row to partition `rank * P div targets`, where `rank` in
+    * [0, targets) orders the target blocks and P = min(targets,
+    * spark.sql.shuffle.partitions), so each partition receives one
+    * contiguous run of ⌈targets/P⌉ or ⌊targets/P⌋ targets (a hash of the
+    * target put 5/12/2/8 of a 3³ grid's blocks on 4 partitions).
+    */
+  private def routeToTargets[T](pieces: Dataset[T], rank: Column, targets: Long): Dataset[T] = {
     val shufflePartitions = pieces.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong
     val p = math.max(1L, math.min(targets, shufflePartitions))
-    pieces
-      .repartitionById(p.toInt, call_function("div", rank.cast("long") * p, lit(targets)).cast("int"))
-      .sortWithinPartitions(Seq(col("tx"), col("ty"), col("tz")) ++ tieBreak: _*)
+    pieces.repartitionById(p.toInt,
+      call_function("div", rank.cast("long") * p, lit(targets)).cast("int"))
   }
 
   /** One `f(key, run)` per run of equal `key` in a key-sorted iterator.
     * `run` reads the underlying iterator lazily and only within its run;
     * whatever `f` leaves unread is skipped.
     */
-  private[graft] def mapRuns[T, K, R](it: Iterator[T])(key: T => K)(f: (K, Iterator[T]) => R): Iterator[R] = {
+  private def mapRuns[T, K, R](it: Iterator[T])(key: T => K)(f: (K, Iterator[T]) => R): Iterator[R] = {
     val in = it.buffered
     new Iterator[R] {
       def hasNext: Boolean = in.hasNext

@@ -21,8 +21,8 @@ object BlockIO {
   private implicit val blockEnc: Encoder[Block] = BlockGrid.blockEncoder
 
   /** canonical per-block file naming — the ONE definition of the on-disk
-    * contract, shared by [[exportNpy]], [[importNpy]], and the
-    * `npy-blocks` DataSource V2 reader so they cannot drift
+    * contract, shared by [[exportNpy]] and the `npy-blocks` DataSource V2
+    * reader ([[importNpyViaSource]]) so they cannot drift
     */
   private[graft] val blockFileName = "block_(\\d+)_(\\d+)_(\\d+)\\.npy$".r
 
@@ -70,11 +70,7 @@ object BlockIO {
       .select(col("bi.bx").as("bx"), col("bi.by").as("by"), col("bi.bz").as("bz"),
         col("nx"), col("ny"), col("nz"), col("c"), col("data"))
       .write.mode("overwrite").parquet(path)
-    val p = new org.apache.hadoop.fs.Path(path, "_grid_meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(metaJson(grid.meta).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    writeSidecar(spark, path, grid.meta)
   }
 
   /** Export one `.npy` per block (`block_<bx>_<by>_<bz>.npy`, shape
@@ -101,10 +97,15 @@ object BlockIO {
         }
       }
     }
+    writeSidecar(spark, dir, grid.meta)
+  }
+
+  /** The `_grid_meta.json` sidecar of [[write]] and [[exportNpy]]. */
+  private def writeSidecar(spark: SparkSession, dir: String, meta: GridMeta): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir, "_grid_meta.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
-    try out.write(metaJson(grid.meta).getBytes(StandardCharsets.UTF_8))
+    try out.write(metaJson(meta).getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
 
@@ -124,32 +125,12 @@ object BlockIO {
   }
 
   /** Import a directory of per-block `.npy` files written by
-    * [[exportNpy]] (or by numpy with the same naming). Distributed: the
-    * binaryFile source reads each file where it lands, no driver
-    * materialization.
-    */
-  def importNpy(spark: SparkSession, dir: String): BlockGrid = {
-    val meta = readSidecar(spark, dir)
-    import spark.implicits._
-    val ds = spark.read.format("binaryFile").load(s"$dir/block_*.npy")
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .map { case (path, bytes) =>
-        val (bx, by, bz) = parseBlockFileName(path)
-          .getOrElse(sys.error(s"unexpected npy file name: $path"))
-        val (shape, data) = Npy.fromBytes(bytes)
-        val c = if (shape.length == 4) shape(3) else 1
-        Block(graft.core.BlockIndex(bx, by, bz), shape(0), shape(1), shape(2), c, data)
-      }
-    BlockGrid(meta, ds)
-  }
-
-  /** Import via the `npy-blocks` DataSource V2 reader
-    * ([[graft.sources.NpyDataSource]]) instead of binaryFile+regex: the
-    * source's file-level pruning means a downstream
+    * [[exportNpy]] (or by numpy with the same naming) through the
+    * `npy-blocks` DataSource V2 reader ([[graft.sources.NpyDataSource]]):
+    * each file is read on an executor, no driver materialization, and
+    * the source's file-level pruning means a downstream
     * `filter(bx/by/bz …)` on the grid's rows skips unopened files
-    * entirely. Same layout, same result (NpySourceSpec pins stitch
-    * parity through both import paths).
+    * entirely.
     */
   def importNpyViaSource(spark: SparkSession, dir: String): BlockGrid = {
     val meta = readSidecar(spark, dir)

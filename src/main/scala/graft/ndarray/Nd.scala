@@ -17,21 +17,8 @@ object Nd {
     * (np.pad mode='linear_ramp', end_values=0 — verified profile for
     * bs=8,o=2: [0,1/3,2/3,1,...,1,2/3,1/3,0], SURVEY.md §2a #1).
     */
-  def stitchProfile(bs: Int, o: Int, isLo: Boolean, isHi: Boolean): Array[Float] = {
-    val ramp = 2 * o - 1
-    val n = bs + 2 * o
-    val w = new Array[Float](n)
-    java.util.Arrays.fill(w, 1.0f)
-    if (!isLo) { // interior low face: ramp up from 0
-      var j = 0
-      while (j < ramp) { w(j) = j.toFloat / ramp; j += 1 }
-    }
-    if (!isHi) { // interior high face: ramp down to 0
-      var j = 0
-      while (j < ramp) { w(n - 1 - j) = j.toFloat / ramp; j += 1 }
-    }
-    w
-  }
+  def stitchProfile(bs: Int, o: Int, isLo: Boolean, isHi: Boolean): Array[Float] =
+    rampProfile(bs + 2 * o, 2 * o - 1, isLo, isHi)
 
   /** Blend weight profile for the local-affine path, one spatial axis.
     *
@@ -45,17 +32,19 @@ object Nd {
     */
   def affineProfile(bs: Int, o: Int, isLo: Boolean, isHi: Boolean): Array[Float] = {
     val op = math.max(0, 2 * o - 1)
-    val n = bs + op + 1
+    rampProfile(bs + op + 1, op, isLo, isHi)
+  }
+
+  /** Ones of length `n`, with a linear ramp of length `ramp` from 0 at
+    * each interior end (`!isLo` / `!isHi`): value j / ramp at distance j
+    * from the outer end. The two profiles above differ only in length
+    * (and only at o = 0).
+    */
+  private def rampProfile(n: Int, ramp: Int, isLo: Boolean, isHi: Boolean): Array[Float] = {
     val w = new Array[Float](n)
     java.util.Arrays.fill(w, 1.0f)
-    if (!isLo) {
-      var j = 0
-      while (j < op) { w(j) = j.toFloat / op; j += 1 }
-    }
-    if (!isHi) {
-      var j = 0
-      while (j < op) { w(n - 1 - j) = j.toFloat / op; j += 1 }
-    }
+    if (!isLo) { var j = 0; while (j < ramp) { w(j) = j.toFloat / ramp; j += 1 } }
+    if (!isHi) { var j = 0; while (j < ramp) { w(n - 1 - j) = j.toFloat / ramp; j += 1 } }
     w
   }
 

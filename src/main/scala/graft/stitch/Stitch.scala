@@ -1,22 +1,9 @@
 package graft.stitch
 
-import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.functions.{col, udf}
-import graft.core.{Block, BlockGrid, BlockIndex, GridMeta}
+import graft.core.{Block, BlockGrid, BlockIndex, GridMeta, HaloPiece}
 import graft.ndarray.Nd
-
-/** One halo fragment in flight: source tile data destined for target block
-  * (tx,ty,tz), to be added at offset (x0,y0,z0) with extent (dx,dy,dz).
-  * `srcKey` is the source block's linear index — a target's pieces are
-  * summed in its order so float32 accumulation order is deterministic
-  * run-to-run (SURVEY.md §7.5).
-  */
-final case class HaloPiece(
-    tx: Int, ty: Int, tz: Int,
-    srcKey: Long,
-    x0: Int, y0: Int, z0: Int,
-    dx: Int, dy: Int, dz: Int,
-    data: Array[Float])
 
 /** Linear-blend stitching of overlapping tiles — the Spark-native
   * re-expression of /root/reference/dask_stitch/stitch.py.
@@ -31,18 +18,17 @@ final case class HaloPiece(
   *
   * Physical plan: one narrow `map` (weighting, codegen-fused) + ONE
   * shuffle: a 27-way `flatMap` keyed by target block, routed to
-  * contiguous runs of the row-major block order
-  * ([[BlockGrid.routeToTargets]]), sorted on (target, srcKey) within each
-  * partition, one assemble-and-sum per target run. Shuffle volume =
+  * contiguous runs of the row-major block order and sorted on (target,
+  * srcKey) within each partition ([[BlockGrid.exchange]]), one
+  * assemble-and-sum per target run. Shuffle volume =
   * output volume + the halo fraction — never a second exchange. At 100 TB
   * this is the only all-to-all. Every partition gets ⌈n/P⌉ or ⌊n/P⌋ of
-  * the n target blocks: hashing the block key, as a `groupByKey` does,
-  * put 5/12/2/8 of a 3³ grid's blocks on 4 partitions, so one core merged
-  * and wrote 12 blocks while the others idled.
+  * the n target blocks: hashing the block key put 5/12/2/8 of a 3³
+  * grid's blocks on 4 partitions, so one core merged and wrote 12 blocks
+  * while the others idled.
   */
 object Stitch {
   private implicit val blockEnc: Encoder[Block] = BlockGrid.blockEncoder
-  private implicit val pieceEnc: Encoder[HaloPiece] = Encoders.product[HaloPiece]
 
   /** Apply the per-tile separable blend weights (stitch.py:7-46). Pure
     * per-row kernel; no data movement.
@@ -61,7 +47,7 @@ object Stitch {
     * destination-keyed halo pieces (exposed separately so benchmarks can
     * time the map phase against the shuffle+merge phase).
     */
-  def emitPieces(grid: BlockGrid): org.apache.spark.sql.Dataset[HaloPiece] = {
+  def emitPieces(grid: BlockGrid): Dataset[HaloPiece] = {
     val meta = grid.meta
     grid.ds.flatMap(b => piecesOf(b, meta))
   }
@@ -73,74 +59,40 @@ object Stitch {
   private[graft] def piecesOf(b: Block, meta: GridMeta): Seq[HaloPiece] = {
     val bs = meta.blocksize; val o = meta.overlap; val g = meta.blockGrid
     val c = meta.components
-    locally {
-      // weights are applied DURING piece extraction (fused multiply —
-      // no full-tile clone); profiles are per-axis, tile-absolute
-      val src = b.bi
-      val wx = Nd.stitchProfile(bs(0), o(0), src.bx == 0, src.bx == g(0) - 1)
-      val wy = Nd.stitchProfile(bs(1), o(1), src.by == 0, src.by == g(1) - 1)
-      val wz = Nd.stitchProfile(bs(2), o(2), src.bz == 0, src.bz == g(2) - 1)
-      val out = scala.collection.mutable.ArrayBuffer.empty[HaloPiece]
-      var dx = -1
-      while (dx <= 1) {
-        var dy = -1
-        while (dy <= 1) {
-          var dz = -1
-          while (dz <= 1) {
-            val tgt = src + ((dx, dy, dz))
-            if (tgt.inGrid(g)) {
-              // global intersection of tile support [src*bs - o, src*bs + bs + o)
-              // with target output region [tgt*bs, tgt*bs + bs), per axis
-              var ok = true
-              val off = new Array[Int](3) // offset within target block
-              val sOff = new Array[Int](3) // offset within source tile
-              val ext = new Array[Int](3)
-              var ax = 0
-              while (ax < 3 && ok) {
-                val sLo = src(ax).toLong * bs(ax) - o(ax)
-                val sHi = sLo + bs(ax) + 2 * o(ax)
-                val tLo = tgt(ax).toLong * bs(ax)
-                val tHi = tLo + bs(ax)
-                val lo = math.max(sLo, tLo); val hi = math.min(sHi, tHi)
-                if (hi <= lo) ok = false
-                else {
-                  off(ax) = (lo - tLo).toInt
-                  sOff(ax) = (lo - sLo).toInt
-                  ext(ax) = (hi - lo).toInt
-                }
-                ax += 1
-              }
-              if (ok) {
-                val patch = Nd.sliceCopyWeighted(
-                  b.data, b.nx, b.ny, b.nz, c,
-                  sOff(0), sOff(1), sOff(2), ext(0), ext(1), ext(2), wx, wy, wz)
-                out += HaloPiece(
-                  tgt.bx, tgt.by, tgt.bz, src.linear(g),
-                  off(0), off(1), off(2), ext(0), ext(1), ext(2), patch)
-              }
-            }
-            dz += 1
-          }
-          dy += 1
-        }
-        dx += 1
-      }
-      out.toSeq
+    // weights are applied DURING piece extraction (fused multiply — no
+    // full-tile clone); profiles are per-axis, tile-absolute
+    val src = b.bi
+    val wx = Nd.stitchProfile(bs(0), o(0), src.bx == 0, src.bx == g(0) - 1)
+    val wy = Nd.stitchProfile(bs(1), o(1), src.by == 0, src.by == g(1) - 1)
+    val wz = Nd.stitchProfile(bs(2), o(2), src.bz == 0, src.bz == g(2) - 1)
+    src.neighbors(g).flatMap { case (tgt, _) =>
+      // global intersection of tile support [src*bs - o, src*bs + bs + o)
+      // with target output region [tgt*bs, tgt*bs + bs), per axis
+      def axis(ax: Int) = BlockGrid.intersect(
+        src(ax).toLong * bs(ax) - o(ax), src(ax).toLong * bs(ax) + bs(ax) + o(ax),
+        tgt(ax).toLong * bs(ax), tgt(ax).toLong * bs(ax) + bs(ax))
+      for ((ox, sx, ex) <- axis(0); (oy, sy, ey) <- axis(1); (oz, sz, ez) <- axis(2))
+      yield HaloPiece(tgt.bx, tgt.by, tgt.bz, src.linear(g), ox, oy, oz, ex, ey, ez,
+        Nd.sliceCopyWeighted(b.data, b.nx, b.ny, b.nz, c, sx, sy, sz, ex, ey, ez, wx, wy, wz))
     }
   }
 
-  /** deterministic assembly of one output block from its halo pieces
-    * (srcKey-sorted f32 accumulation) — shared by [[stitchBlocks]] and
-    * the streaming stitch so both produce bit-identical blocks
+  /** deterministic assembly of one output block from its halo pieces,
+    * which `run` must yield in ascending srcKey order (the f32
+    * accumulation order) — shared by [[stitchBlocks]] and the streaming
+    * stitch so both produce bit-identical blocks
     */
-  private[graft] def assembleBlock(tx: Int, ty: Int, tz: Int,
-      pieces: Iterable[HaloPiece], meta: GridMeta): Block = {
+  private[graft] def assembleBlock(bi: BlockIndex, run: Iterator[HaloPiece],
+      meta: GridMeta): Block = {
     val bs = meta.blocksize; val c = meta.components
     val acc = new Array[Float](bs(0) * bs(1) * bs(2) * c)
-    pieces.toArray.sortBy(_.srcKey).foreach { p =>
+    var last = Long.MinValue
+    run.foreach { p =>
+      require(p.srcKey >= last, s"block $bi: piece from srcKey ${p.srcKey} arrived after $last")
+      last = p.srcKey
       Nd.addInto(acc, bs(0), bs(1), bs(2), c, p.data, p.x0, p.y0, p.z0, p.dx, p.dy, p.dz)
     }
-    Block(BlockIndex(tx, ty, tz), bs(0), bs(1), bs(2), c, acc)
+    Block(bi, bs(0), bs(1), bs(2), c, acc)
   }
 
   /** Bounds per axis: o >= 1 (ramps are 2o-1 long); 2o <= bs (the ramp
@@ -163,26 +115,12 @@ object Stitch {
     */
   def stitchBlocks(grid: BlockGrid): BlockGrid = {
     val meta = grid.meta
-    val bs = meta.blocksize; val c = meta.components
     requireStitchable(meta)
     val outMeta = meta.copy(overlap = Array(0, 0, 0))
-
-    val merged = merge(emitPieces(grid), BlockGrid.linearTarget(meta.blockGrid),
-      meta.numBlocks, meta)
+    val merged = BlockGrid.exchange(emitPieces(grid), BlockGrid.linearTarget(meta.blockGrid),
+      meta.numBlocks)(assembleBlock(_, _, meta))
     BlockGrid(outMeta, merged)
   }
-
-  /** The merge shared by [[stitchBlocks]] and [[restitchBlocks]]: route
-    * the pieces by target `rank` (in [0, targets)), then assemble each
-    * target's srcKey-sorted run — the deterministic float32 accumulation
-    * order of [[assembleBlock]].
-    */
-  private def merge(pieces: Dataset[HaloPiece], rank: Column, targets: Long,
-      meta: GridMeta): Dataset[Block] =
-    BlockGrid.routeToTargets(pieces, rank, targets, col("srcKey"))
-      .mapPartitions(BlockGrid.mapRuns(_)((p: HaloPiece) => (p.tx, p.ty, p.tz)) { (key, run) =>
-        assembleBlock(key._1, key._2, key._3, run.toSeq, meta)
-      })
 
   /** INCREMENTAL RE-STITCH — a tile was re-acquired/replaced: only the
     * output blocks whose 26-neighborhood touches a changed tile can
@@ -211,29 +149,23 @@ object Stitch {
       require(bi.inGrid(g), s"restitch: changed tile (${bi.bx},${bi.by},${bi.bz}) " +
         s"is outside the ${g.mkString("x")} block grid")
     }
-    def inBounds(x: Int, y: Int, z: Int): Boolean =
-      x >= 0 && y >= 0 && z >= 0 && x < g(0) && y < g(1) && z < g(2)
-    def neighborhood(s: Set[(Int, Int, Int)]): Set[(Int, Int, Int)] =
-      s.flatMap { case (x, y, z) =>
-        for {
-          dx <- -1 to 1; dy <- -1 to 1; dz <- -1 to 1
-          if inBounds(x + dx, y + dy, z + dz)
-        } yield (x + dx, y + dy, z + dz)
-      }
-    val changed0 = changed.map(bi => (bi.bx, bi.by, bi.bz)).toSet
-    val affected = neighborhood(changed0)
+    def neighborhood(s: Set[BlockIndex]): Set[BlockIndex] =
+      s.flatMap(_.neighbors(g).map(_._1))
+    val affected = neighborhood(changed.toSet)
     val sources = neighborhood(affected)
     val spark = grid.ds.sparkSession
     val srcB = spark.sparkContext.broadcast(sources)
     // a target's rank in the sorted affected set routes it: ranking over
     // the whole grid would put a clustered neighbourhood on one partition
-    val rankB = spark.sparkContext.broadcast(affected.toSeq.sorted.zipWithIndex.toMap)
-    val sub = grid.ds.filter(b => srcB.value.contains((b.bi.bx, b.bi.by, b.bi.bz)))
+    val rankB = spark.sparkContext.broadcast(
+      affected.toSeq.sortBy(_.linear(g)).zipWithIndex.toMap)
+    val sub = grid.ds.filter(b => srcB.value.contains(b.bi))
     val outMeta = meta.copy(overlap = Array(0, 0, 0))
     val pieces = emitPieces(BlockGrid(meta, sub))
-      .filter(p => rankB.value.contains((p.tx, p.ty, p.tz)))
-    val rank = udf((x: Int, y: Int, z: Int) => rankB.value((x, y, z)))
-    val merged = merge(pieces, rank(col("tx"), col("ty"), col("tz")), affected.size, meta)
+      .filter(p => rankB.value.contains(BlockIndex(p.tx, p.ty, p.tz)))
+    val rank = udf((x: Int, y: Int, z: Int) => rankB.value(BlockIndex(x, y, z)))
+    val merged = BlockGrid.exchange(pieces, rank(col("tx"), col("ty"), col("tz")),
+      affected.size)(assembleBlock(_, _, meta))
     BlockGrid(outMeta, merged)
   }
 

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.core.{Block, BlockGrid, GridMeta}
-import graft.stitch.{HaloPiece, Stitch}
+import graft.core.{Block, BlockGrid, BlockIndex, GridMeta, HaloPiece}
+import graft.stitch.Stitch
 
 /** STREAMING stitch — the reference's core operator
   * (stitch.py:94-121) reformulated for an unbounded tile stream:
@@ -20,9 +20,9 @@ import graft.stitch.{HaloPiece, Stitch}
   * in-flight block is its arrived pieces, removed at emission — peak
   * state is bounded by the arrival disorder (blocks whose neighborhood
   * is complete leave state immediately), not by the acquisition size.
-  * Assembly sorts pieces by srcKey exactly like the batch path
-  * ([[Stitch.assembleBlock]]), so every emitted block is BIT-IDENTICAL
-  * to `Stitch.stitchBlocks` on the same tiles
+  * Assembly sorts the buffered pieces into the srcKey order the batch
+  * merge sums in ([[Stitch.assembleBlock]]), so every emitted block is
+  * BIT-IDENTICAL to `Stitch.stitchBlocks` on the same tiles
   * (StreamingStitchSpec pins it over shuffled multi-batch arrival).
   *
   * A tile that never arrives leaves its 27 targets in state forever —
@@ -45,7 +45,6 @@ object StreamingStitch {
   final case class PieceBuf(pieces: Array[HaloPiece], done: Boolean)
 
   private implicit val blockEnc: Encoder[Block] = BlockGrid.blockEncoder
-  private implicit val pieceEnc: Encoder[HaloPiece] = Encoders.product[HaloPiece]
   private implicit val bufEnc: Encoder[PieceBuf] = Encoders.product[PieceBuf]
   private implicit val keyEnc: Encoder[(Int, Int, Int)] =
     Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt, Encoders.scalaInt)
@@ -56,6 +55,31 @@ object StreamingStitch {
   private[graft] def expectedPieces(x: Int, y: Int, z: Int, g: Array[Int]): Int = {
     def axis(v: Int, n: Int): Int = 1 + (if (v > 0) 1 else 0) + (if (v < n - 1) 1 else 0)
     axis(x, g(0)) * axis(y, g(1)) * axis(z, g(2))
+  }
+
+  /** A buffered target's block: its pieces summed in the batch merge's
+    * srcKey order, so a complete block is bit-identical to the batch one.
+    */
+  private def assemble(key: (Int, Int, Int), pieces: Array[HaloPiece], meta: GridMeta): Block =
+    Stitch.assembleBlock(BlockIndex(key._1, key._2, key._3),
+      pieces.sortBy(_.srcKey).iterator, meta)
+
+  /** One arrival step of a target, shared by both stream variants: add
+    * the `fresh` pieces to the `buffered` ones, keeping the first per
+    * srcKey — a replay before the neighborhood completes re-delivers
+    * identical pieces, so at-least-once delivery is safe in the buffering
+    * phase too, not just after the tombstone — check the count against
+    * [[expectedPieces]], and assemble once it is reached. Left = the
+    * pieces still waiting, Right = the finished block.
+    */
+  private def arrive(key: (Int, Int, Int), buffered: Array[HaloPiece],
+      fresh: Iterator[HaloPiece], meta: GridMeta): Either[Array[HaloPiece], Block] = {
+    val arrived = (buffered ++ fresh).distinctBy(_.srcKey)
+    val need = expectedPieces(key._1, key._2, key._3, meta.blockGrid)
+    require(arrived.length <= need,
+      s"block $key received ${arrived.length} distinct pieces, expected " +
+        s"$need — tiles outside the declared grid geometry")
+    if (arrived.length == need) Right(assemble(key, arrived, meta)) else Left(arrived)
   }
 
   /** Streaming stitch of `tiles` (extended blocksize+2·overlap chunks,
@@ -93,7 +117,7 @@ object StreamingStitch {
   final case class EtBuf(pieces: Array[HaloPiece], maxTs: Long, done: Boolean)
   private implicit val etBufEnc: Encoder[EtBuf] = Encoders.product[EtBuf]
   private implicit val pieceTsEnc: Encoder[(HaloPiece, java.sql.Timestamp)] =
-    Encoders.tuple(Encoders.product[HaloPiece], Encoders.TIMESTAMP)
+    Encoders.tuple(HaloPiece.encoder, Encoders.TIMESTAMP)
   private implicit val blockTsEnc: Encoder[(Block, java.sql.Timestamp)] =
     Encoders.tuple(BlockGrid.blockEncoder, Encoders.TIMESTAMP)
 
@@ -125,7 +149,6 @@ object StreamingStitch {
       watermarkDelay: String = "0 seconds"): Dataset[Block] = {
     Stitch.requireStitchable(meta)
     require(stallGapMs > 0, s"stallGapMs must be > 0, got $stallGapMs")
-    val g = meta.blockGrid
     // the watermark goes on the PIECE rows: a typed flatMap strips
     // column metadata, and EventTimeTimeout requires the watermarked
     // column to be visible at the stateful operator itself
@@ -159,8 +182,7 @@ object StreamingStitch {
             else {
               tombstone(buf.maxTs)
               if (buf.pieces.isEmpty) Iterator.empty
-              else Iterator.single(
-                Stitch.assembleBlock(key._1, key._2, key._3, buf.pieces.toSeq, meta))
+              else Iterator.single(assemble(key, buf.pieces, meta))
             }
           } else if (state.exists && state.get.done) {
             // late pieces after emission: drop idempotently — and RE-ARM
@@ -173,27 +195,18 @@ object StreamingStitch {
             val rows = it.toArray
             val prev = if (state.exists) state.get
               else EtBuf(Array.empty, Long.MinValue, done = false)
-            // dedup by source tile: a replay BEFORE the neighborhood
-            // completes re-delivers identical pieces — keeping the first
-            // per srcKey makes at-least-once delivery safe in the
-            // buffering phase too, not just after the tombstone
-            val arrived = (prev.pieces ++ rows.map(_._1)).distinctBy(_.srcKey)
             val maxTs = (prev.maxTs +: rows.map(_._2.getTime)).max
-            val need = expectedPieces(key._1, key._2, key._3, g)
-            require(arrived.length <= need,
-              s"block $key received ${arrived.length} distinct pieces, expected " +
-                s"$need — tiles outside the declared grid geometry")
-            if (arrived.length == need) {
-              tombstone(maxTs)
-              Iterator.single(
-                Stitch.assembleBlock(key._1, key._2, key._3, arrived.toSeq, meta))
-            } else {
-              state.update(EtBuf(arrived, maxTs, done = false))
-              // stall clock: event time of the LAST piece + gap (never
-              // at-or-behind the watermark, which Spark rejects)
-              state.setTimeoutTimestamp(
-                math.max(maxTs + stallGapMs, state.getCurrentWatermarkMs + 1))
-              Iterator.empty
+            arrive(key, prev.pieces, rows.iterator.map(_._1), meta) match {
+              case Right(block) =>
+                tombstone(maxTs)
+                Iterator.single(block)
+              case Left(arrived) =>
+                state.update(EtBuf(arrived, maxTs, done = false))
+                // stall clock: event time of the LAST piece + gap (never
+                // at-or-behind the watermark, which Spark rejects)
+                state.setTimeoutTimestamp(
+                  math.max(maxTs + stallGapMs, state.getCurrentWatermarkMs + 1))
+                Iterator.empty
             }
           }
         })
@@ -204,7 +217,6 @@ object StreamingStitch {
     Stitch.requireStitchable(meta) // same geometry contract as the batch
     // path — without it, o=0 would leave every block waiting forever
     // and 2o>bs would silently blend wrong
-    val g = meta.blockGrid
     val timeoutConf = if (partialAfterMs.isDefined)
       GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
     tiles
@@ -218,31 +230,24 @@ object StreamingStitch {
             val buf = state.get
             state.update(PieceBuf(Array.empty, done = true)) // tombstone
             if (buf.done || buf.pieces.isEmpty) Iterator.empty
-            else Iterator.single(
-              Stitch.assembleBlock(key._1, key._2, key._3, buf.pieces.toSeq, meta))
+            else Iterator.single(assemble(key, buf.pieces, meta))
           } else if (state.exists && state.get.done) {
             // replayed tiles after emission: drop idempotently
             Iterator.empty
           } else {
-            // dedup by source tile (see the event-time variant): replays
-            // before completion are dropped here, replays after it hit
-            // the tombstone — at-least-once safe in both phases
-            val arrived = ((if (state.exists) state.get.pieces
-              else Array.empty[HaloPiece]) ++ it).distinctBy(_.srcKey)
-            val need = expectedPieces(key._1, key._2, key._3, g)
-            require(arrived.length <= need,
-              s"block $key received ${arrived.length} distinct pieces, expected " +
-                s"$need — tiles outside the declared grid geometry")
-            if (arrived.length == need) {
-              state.update(PieceBuf(Array.empty, done = true)) // tombstone
-              Iterator.single(
-                Stitch.assembleBlock(key._1, key._2, key._3, arrived.toSeq, meta))
-            } else {
-              state.update(PieceBuf(arrived, done = false))
-              // the clock restarts on each arrival: "stalled" means no
-              // progress for the duration, not slow acquisition
-              partialAfterMs.foreach(state.setTimeoutDuration)
-              Iterator.empty
+            // replays before completion are dropped by `arrive`, replays
+            // after it hit the tombstone — at-least-once safe in both phases
+            val buffered = if (state.exists) state.get.pieces else Array.empty[HaloPiece]
+            arrive(key, buffered, it, meta) match {
+              case Right(block) =>
+                state.update(PieceBuf(Array.empty, done = true)) // tombstone
+                Iterator.single(block)
+              case Left(arrived) =>
+                state.update(PieceBuf(arrived, done = false))
+                // the clock restarts on each arrival: "stalled" means no
+                // progress for the duration, not slow acquisition
+                partialAfterMs.foreach(state.setTimeoutDuration)
+                Iterator.empty
             }
           }
         })

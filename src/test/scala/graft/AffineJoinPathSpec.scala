@@ -4,7 +4,7 @@ import graft.affine.{AffineGrid, LocalAffine}
 import graft.ndarray.Nd
 
 /** Pins the broadcast→join switchover of localAffinesToField: past
-  * `maxBroadcastBlocks` the affines ship as a Dataset through a
+  * `BroadcastMaxBlocks` the affines ship as a Dataset through a
   * one-shuffle neighbor join instead of a broadcast, and the output must
   * be BIT-identical (same kernel, same neighbor iteration order, so the
   * float32 accumulation cannot differ).
@@ -25,8 +25,8 @@ class AffineJoinPathSpec extends SparkSpec {
       val disp = r.nextBoolean()
       val viaBroadcast = LocalAffine.localAffinesToField(
         spark, shape, sp, aff, bs, o, disp).collectDense()
-      val viaJoin = LocalAffine.localAffinesToField(
-        spark, shape, sp, aff, bs, o, disp, maxBroadcastBlocks = 0).collectDense()
+      val viaJoin = LocalAffine.localAffinesToFieldJoin(
+        spark, shape, sp, LocalAffine.affineRows(spark, aff), g, bs, o, disp).collectDense()
       assert(viaBroadcast.length == viaJoin.length,
         s"g=${g.toSeq} bs=${bs.toSeq} o=${o.toSeq}: size mismatch")
       assert(Nd.maxAbsDiff(viaBroadcast, viaJoin) == 0.0f,

@@ -141,7 +141,7 @@ class NpySourceSpec extends SparkSpec {
     }
   }
 
-  test("stitch through the DSv2 import path matches the binaryFile import path") {
+  test("stitch via the DSv2 import path matches stitchBlocks on the in-memory grid") {
     val dir = java.nio.file.Files.createTempDirectory("npysrc").toString
     val s = spark
     // an overlapped stitchable grid (bs 4, o 1 -> 6^3 tiles)
@@ -149,15 +149,14 @@ class NpySourceSpec extends SparkSpec {
       x <- 0 until 2; y <- 0 until 2; z <- 0 until 2
     } yield Block(BlockIndex(x, y, z), 6, 6, 6, 1,
       Array.tabulate(216)(i => (x * 31 + y * 17 + z * 7 + i % 5).toFloat))
-    BlockIO.exportNpy(
-      BlockGrid.fromTiles(s, tiles, Array(4, 4, 4), Array(1, 1, 1), Array(2, 2, 2), 1),
-      dir)
+    val inMemory = BlockGrid.fromTiles(s, tiles, Array(4, 4, 4), Array(1, 1, 1), Array(2, 2, 2), 1)
+    BlockIO.exportNpy(inMemory, dir)
     def stitched(g: BlockGrid) = graft.stitch.Stitch.stitchBlocks(g).ds.collect()
       .map(b => ((b.bi.bx, b.bi.by, b.bi.bz), b.data.toSeq)).toMap
     val viaV2 = stitched(BlockIO.importNpyViaSource(s, dir))
-    val viaBinary = stitched(BlockIO.importNpy(s, dir))
-    assert(viaV2.keySet == viaBinary.keySet && viaV2.keySet.size == 8)
-    viaV2.keys.foreach(k => assert(viaV2(k) == viaBinary(k), s"block $k differs"))
+    val want = stitched(inMemory)
+    assert(viaV2.keySet == want.keySet && viaV2.keySet.size == 8)
+    viaV2.keys.foreach(k => assert(viaV2(k) == want(k), s"block $k differs"))
   }
 
   test("non-index predicates stay with Spark and still filter correctly") {

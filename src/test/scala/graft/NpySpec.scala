@@ -59,7 +59,7 @@ class NpySpec extends SparkSpec {
       Array.fill(5 * 4 * 3 * 3)(rnd.nextFloat()))
     val grid = BlockGrid.fromTiles(spark, tiles, bs, Array(0, 0, 0), g, 3)
     BlockIO.exportNpy(grid, s"$dir/npy")
-    val back = BlockIO.importNpy(spark, s"$dir/npy")
+    val back = BlockIO.importNpyViaSource(spark, s"$dir/npy")
     assert(back.meta.components == 3)
     assert(back.ds.count() == 8)
     assert(Nd.maxAbsDiff(back.collectDense(), grid.collectDense()) == 0.0f)

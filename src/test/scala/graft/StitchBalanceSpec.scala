@@ -1,5 +1,6 @@
 package graft
 
+import graft.affine.{AffineGrid, LocalAffine}
 import graft.core.{Block, BlockGrid, BlockIndex, Boundary}
 import graft.stitch.Stitch
 
@@ -49,6 +50,14 @@ class StitchBalanceSpec extends SparkSpec {
     val rechunked = exact.rechunk(Array(4, 4, 4))
     assert(partitionRuns(rechunked) == balanced)
     assert(exchanges(rechunked) == 1)
+  }
+
+  test("localAffinesToFieldJoin routes its one exchange the same way") {
+    val aff = AffineGrid(3, 3, 3, 3, 4, Array.tabulate(27 * 12)(i => (i % 5) * 0.25))
+    val out = LocalAffine.localAffinesToFieldJoin(spark, Array(12L, 12L, 12L),
+      Array(1f, 1f, 1f), LocalAffine.affineRows(spark, aff), g, Array(4, 4, 4), Array(1, 1, 1))
+    assert(partitionRuns(out) == balanced)
+    assert(exchanges(out) == 1)
   }
 
   test("restitchBlocks routes by rank in the affected set, not by grid position") {

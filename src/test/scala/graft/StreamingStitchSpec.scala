@@ -113,7 +113,8 @@ class StreamingStitchSpec extends SparkSpec {
       val want = fed.flatMap(b => Stitch.piecesOf(b, meta4))
         .groupBy(p => (p.tx, p.ty, p.tz))
         .map { case (k, ps) =>
-          k -> Stitch.assembleBlock(k._1, k._2, k._3, ps, meta4).data.toSeq
+          k -> Stitch.assembleBlock(BlockIndex(k._1, k._2, k._3),
+            ps.sortBy(_.srcKey).iterator, meta4).data.toSeq
         }
       // the stall passes → no-data batches fire the timeouts: every
       // block with >=1 arrived piece emits (x<=1 complete-or-partial,
@@ -168,7 +169,8 @@ class StreamingStitchSpec extends SparkSpec {
       val want = fed.flatMap(b => Stitch.piecesOf(b, meta4))
         .groupBy(p => (p.tx, p.ty, p.tz))
         .map { case (k, ps) =>
-          k -> Stitch.assembleBlock(k._1, k._2, k._3, ps, meta4).data.toSeq
+          k -> Stitch.assembleBlock(BlockIndex(k._1, k._2, k._3),
+            ps.sortBy(_.srcKey).iterator, meta4).data.toSeq
         }
       // the acquisition clock jumps past the gap: tile (3,0,0) arrives
       // at t=10s+gap+1s, advancing the watermark — x=1 blocks (untouched
